@@ -19,7 +19,11 @@ trait Catalog {
   def resolve(name: String): Either[graft.Err, DataFrame]
 
   /** Static cardinality class for the finiteness gate. Virtual relations
-    * are countably infinite; any stored table is constrained-finite. */
+    * are countably infinite; any stored table is constrained-finite; an
+    * unknown name fails as [[resolve]] does. This default builds the
+    * DataFrame only to learn that the name exists; the engine's catalogs
+    * override it to answer from names alone, so the gate never pays for a
+    * frame (or a parquet schema read) that compile will build again. */
   def cardinality(name: String): Either[graft.Err, Cardinality] =
     if (Virtual.isVirtual(name)) Right(Cardinality.AlephZero)
     else resolve(name).map(_ => Cardinality.ConstrainedFinite)
@@ -41,5 +45,11 @@ final class ParquetCatalog(spark: SparkSession, dir: String) extends Catalog {
         "use it as a Select filter or constraint target"))
     else if (tableNames.contains(name))
       Right(spark.read.parquet(s"$dir/$name.parquet"))
+    else Left(graft.Err.RelationNotFoundBare(name))
+
+  /** By name: a missing parquet file surfaces at compile, not here. */
+  override def cardinality(name: String): Either[graft.Err, Cardinality] =
+    if (Virtual.isVirtual(name)) Right(Cardinality.AlephZero)
+    else if (tableNames.contains(name)) Right(Cardinality.ConstrainedFinite)
     else Left(graft.Err.RelationNotFoundBare(name))
 }

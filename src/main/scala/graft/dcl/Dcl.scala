@@ -138,9 +138,8 @@ object Diff {
               import org.apache.spark.sql.functions.col
               val aw = a.wideDf
               val tw = t.wideDf
-              val rhKey = Seq(Engine.RhCol)
-              val addedW = tw.join(aw.select(col(Engine.RhCol)), rhKey, "left_anti")
-              val removedW = aw.join(tw.select(col(Engine.RhCol)), rhKey, "left_anti")
+              val addedW = Engine.digestJoin(tw, aw.select(col(Engine.RhCol)), "left_anti")
+              val removedW = Engine.digestJoin(aw, tw.select(col(Engine.RhCol)), "left_anti")
               Some(RelationModified(name,
                 added = Delta(Extension.Dist(addedW.drop(Engine.RhCol), Some(addedW)), t.struct),
                 removed = Delta(Extension.Dist(removedW.drop(Engine.RhCol), Some(removedW)), a.struct),
@@ -307,7 +306,6 @@ object Merge {
                   // arithmetic instead of a full-relation aggregation.
                   case _ =>
                     import org.apache.spark.sql.functions.col
-                    val rhKey = Seq(Engine.RhCol)
                     val rhc = base.rowHash
                     def digestsOf(w: DataFrame): DataFrame = w.select(col(Engine.RhCol))
                     // MATERIALIZE each delta once (cut): a delta is a lazy
@@ -325,8 +323,8 @@ object Merge {
                         val rRemW = graft.operators.Checkpoints.cut(rRemD.wideDf(rhc))
                         // conflict probe on digest sets:
                         // (lAdd ∩ rRem) ∪ (lRem ∩ rAdd) — delta-sized
-                        val confD = digestsOf(lAddW).join(digestsOf(rRemW), rhKey, "left_semi")
-                          .unionAll(digestsOf(lRemW).join(digestsOf(rAddW), rhKey, "left_semi"))
+                        val confD = Engine.digestJoin(digestsOf(lAddW), digestsOf(rRemW), "left_semi")
+                          .unionAll(Engine.digestJoin(digestsOf(lRemW), digestsOf(rAddW), "left_semi"))
                           .distinct()
                         val nConf = confD.count()
                         if (nConf > 0) {
@@ -366,8 +364,8 @@ object Merge {
                           // dedup — the one overlap two honest diffs can have)
                           val remsD = digestsOf(lRemW).unionAll(digestsOf(rRemW))
                           val adds = lAddW.unionAll(
-                            rAddW.join(digestsOf(lAddW), rhKey, "left_anti"))
-                          val mw = baseW.join(remsD, rhKey, "left_anti").unionAll(adds)
+                            Engine.digestJoin(rAddW, digestsOf(lAddW), "left_anti"))
+                          val mw = Engine.digestJoin(baseW, remsD, "left_anti").unionAll(adds)
                           // root = base.root − root(lRem ∪ rRem) + root(adds):
                           // exact limb arithmetic over delta-sized digest
                           // aggregations (the remove union is deduped —
@@ -378,7 +376,7 @@ object Merge {
                         }
                       case _ =>
                         // left-only change: merged = (base − lRem) ∪ lAdd
-                        val mw = baseW.join(digestsOf(lRemW), rhKey, "left_anti").unionAll(lAddW)
+                        val mw = Engine.digestJoin(baseW, digestsOf(lRemW), "left_anti").unionAll(lAddW)
                         val remRoot = Hashing.contentRootOf(lRemW, col(Engine.RhCol))
                         val addRoot = Hashing.contentRootOf(lAddW, col(Engine.RhCol))
                         (mw, base.root.subtract(remRoot).merge(addRoot))

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.DataFrame
 import graft.catalog.Catalog
+import graft.types.Cardinality
 import graft.virtual.Virtual
 
 /** Catalog over an engine Database, optionally falling back to an external
@@ -19,5 +20,14 @@ final class DbCatalog(db: Database, fallback: Option[Catalog] = None) extends Ca
         case Some(c) => c.resolve(name)
         case None    => Left(graft.Err.RelationNotFoundBare(name))
       }
+    }
+
+  /** By name: no frame is built for the gate. */
+  override def cardinality(name: String): Either[graft.Err, Cardinality] =
+    if (Virtual.isVirtual(name)) Right(Cardinality.AlephZero)
+    else if (db.relations.contains(name)) Right(Cardinality.ConstrainedFinite)
+    else fallback match {
+      case Some(c) => c.cardinality(name)
+      case None    => Left(graft.Err.RelationNotFoundBare(name))
     }
 }

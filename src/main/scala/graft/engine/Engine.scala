@@ -19,7 +19,9 @@ import graft.types.{Domain, RelSchema, Value}
   *    duplicate check), constraint membership checks, and DCL diff/merge
   *    become O(1)/O(n) driver operations with ZERO Spark jobs — the same
   *    regime the reference's in-memory backend lives in permanently. As a
-  *    DataFrame it is a LocalTableScan, which Catalyst broadcasts freely.
+  *    DataFrame it is a LocalTableScan, which Catalyst broadcasts freely;
+  *    building one costs about 1 µs per row, so the frame is cached per
+  *    relation version ([[LocalFrames]]).
   *  - [[Extension.Dist]]: a lazy DataFrame plan. Everything stays set-wise
   *    (anti-joins, aggregations) — the only formulation that survives when
   *    a bulk insert pulls 10^9 rows from parquet.
@@ -64,11 +66,12 @@ final case class StoredRelation(
   def rowHash: Column = Hashing.rowHashCol(name, struct)
   def cardinality: Long = root.count
 
-  /** The extension as a DataFrame (a LocalTableScan for Local relations —
-    * cheap to build, broadcastable by Catalyst). */
+  /** The extension as a DataFrame. A Local relation is a LocalTableScan
+    * (broadcastable by Catalyst, collected with no Spark job); building and
+    * analyzing it costs about 1 µs per row, so it is served from
+    * [[LocalFrames]], which pays that once per relation version. */
   def df: DataFrame = ext match {
-    case Extension.Local(rows) =>
-      SparkSession.active.createDataFrame(rows.values.toSeq.asJava, struct)
+    case Extension.Local(rows) => LocalFrames.frame(SparkSession.active, this, rows)
     case Extension.Dist(d, _) => d
   }
 
@@ -160,6 +163,17 @@ object Engine {
     * schema of every digest-carrying wide frame. */
   private[graft] def wideStruct(struct: StructType): StructType =
     StructType(struct.fields :+ StructField(RhCol, StringType))
+
+  /** Semi- or anti-join of a frame carrying [[RhCol]] against a frame of
+    * digests, keyed on the digest. Spark's `USING` join emits the key
+    * column first; this keeps `wide`'s own column order, so the result
+    * still unions by position with other wide frames and keeps the
+    * trailing [[RhCol]] that [[Extension.Dist]]'s twin promises. Every
+    * digest-keyed join goes through here. */
+  private[graft] def digestJoin(wide: DataFrame, digests: DataFrame, how: String): DataFrame = {
+    require(how == "left_semi" || how == "left_anti", s"digestJoin keeps the left side only: $how")
+    wide.join(digests, Seq(RhCol), how).select(wide.columns.toIndexedSeq.map(c => col(s"`$c`")): _*)
+  }
 
   /** Wrap a mutated Dist plan, checkpointing once the accumulated chain
     * depth passes [[MaxPlanChain]]. Returns the new extension plus the
@@ -582,8 +596,8 @@ object Engine {
           hashed.keysIterator.map(Row(_)).toSeq.asJava, keySchema)
         val storedW = w.getOrElse(
           d.withColumn(RhCol, rel.rowHash).localCheckpoint(false))
-        val clash = storedW.select(col(s"`$RhCol`"))
-          .join(broadcast(keysDf), Seq(RhCol), "left_semi").limit(1).collect()
+        val clash = digestJoin(storedW.select(col(s"`$RhCol`")), broadcast(keysDf), "left_semi")
+          .limit(1).collect()
         if (clash.nonEmpty) Left(Err.DuplicateTuple(clash.head.getString(0)))
         else {
           val batchWide = spark.createDataFrame(
@@ -657,8 +671,8 @@ object Engine {
       _ <- storedW match {
         case None => Right(())
         case Some(sw) =>
-          val clash = wide.select(col(s"`$RhCol`"))
-            .join(sw.select(col(s"`$RhCol`")), Seq(RhCol), "left_semi").limit(1).collect()
+          val clash = digestJoin(wide.select(col(s"`$RhCol`")),
+            sw.select(col(s"`$RhCol`")), "left_semi").limit(1).collect()
           if (clash.isEmpty) Right(()) else Left(Err.DuplicateTuple(clash.head.getString(0)))
       }
       newWide = storedW.map(_.unionAll(wide)).getOrElse(wide)
@@ -726,7 +740,7 @@ object Engine {
               // null-free and the canonical digest encoding is injective
               // on raw values, so digest-equality IS attribute-equality.
               val delD = toDelete.select(rel.rowHash.as(RhCol))
-              boundedDistWide(ww.join(delD, Seq(RhCol), "left_anti"), rel.chain, cost = 2)
+              boundedDistWide(digestJoin(ww, delD, "left_anti"), rel.chain, cost = 2)
             case None =>
               boundedDist(graft.core.Algebra.diff(d, toDelete), rel.chain, cost = 2)
           }

@@ -1,7 +1,9 @@
 package graft.scl
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LocalTableScanExec
 import graft.catalog.Catalog
 import graft.drl.{Compiler, Gate, Query, Parser => DrlParser}
 import graft.hashing.Hashing
@@ -12,17 +14,22 @@ import graft.sexp.Sexp.{Atom, SList}
   * (reference lib/scl/ast.ml:3-7, lib/scl/executor.ml:41-70,
   * lib/session.ml:20-67).
   *
-  * A cursor wraps `df.toLocalIterator()` over the snapshot the query was
-  * begun on: the DataFrame plan is immutable, so later mutations of the
-  * engine state can never leak into an open cursor — the reference pins
-  * the db snapshot for the same reason (lib/session.ml:11). Batches
-  * stream from executors incrementally; nothing is fully collected. */
+  * A cursor iterates the snapshot the query was begun on: the DataFrame
+  * plan is immutable, so later mutations of the engine state can never
+  * leak into an open cursor — the reference pins the db snapshot for the
+  * same reason (lib/session.ml:11). How it iterates depends on the
+  * executed plan: a bare `LocalTableScanExec` (a driver-local relation,
+  * possibly filtered or projected, which Catalyst folds into the scan)
+  * already holds its rows in the driver, so they are collected with no
+  * Spark job — one extra copy of at most `Engine.LocalThreshold` rows.
+  * Every other plan streams through `df.toLocalIterator()`, one partition
+  * at a time from the executors, and is never fully collected. */
 final case class Batch(cursorId: String, rows: Seq[Row], schema: Seq[String], hasMore: Boolean)
 
 final class Cursors {
   val DefaultBatch = 50 // reference lib/scl/executor.ml:1
 
-  private final case class Cursor(id: String, iter: java.util.Iterator[Row],
+  private final case class Cursor(id: String, iter: Iterator[Row],
       schema: Seq[String], querySexp: String, dbHash: String)
   private val registry = mutable.Map[String, Cursor]()
   private var counter = 0
@@ -31,7 +38,11 @@ final class Cursors {
   def register(df: DataFrame, querySexp: String, dbHash: String): String = {
     val id = Hashing.sha256Hex(counter.toString + querySexp + dbHash)
     counter += 1
-    registry(id) = Cursor(id, df.toLocalIterator(), df.columns.toSeq, querySexp, dbHash)
+    val rows = df.queryExecution.executedPlan match {
+      case _: LocalTableScanExec => df.collect().iterator // driver rows: no job
+      case _                     => df.toLocalIterator().asScala
+    }
+    registry(id) = Cursor(id, rows, df.columns.toSeq, querySexp, dbHash)
     id
   }
 

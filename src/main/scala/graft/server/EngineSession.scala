@@ -8,6 +8,7 @@ import graft.engine.{Database, DbCatalog}
 import graft.scl.Cursors
 import graft.sexp.Sexp
 import graft.sexp.Sexp.{Atom, SList}
+import graft.types.Cardinality
 
 /** The listener-equivalent session: one mutable head database, a snapshot
   * store + branch registry, a cursor registry, and a dispatcher over the
@@ -102,16 +103,25 @@ final class EngineSession(spark: SparkSession, external: Option[Catalog] = None,
     * (parquet) tables. */
   def catalog: Catalog = catalogFor(dbOpt)
 
-  private def catalogFor(snap: Option[Database]): Catalog = new Catalog {
-    def resolve(name: String): Either[Err, DataFrame] = name match {
-      case "sakura:branch" => Right(store.branchDf(spark))
-      case "sakura:head"   => Right(store.headDf(spark))
-      case _ =>
-        snap match {
-          case Some(d) => new DbCatalog(d, external).resolve(name)
-          case None => external.toRight(Err.RelationNotFoundBare(name): Err)
-            .flatMap(_.resolve(name))
-        }
+  private def catalogFor(snap: Option[Database]): Catalog = {
+    val below: Catalog = snap match {
+      case Some(d) => new DbCatalog(d, external)
+      case None => external.getOrElse(new Catalog {
+        def resolve(name: String): Either[Err, DataFrame] = Left(Err.RelationNotFoundBare(name))
+      })
+    }
+    new Catalog {
+      def resolve(name: String): Either[Err, DataFrame] = name match {
+        case "sakura:branch" => Right(store.branchDf(spark))
+        case "sakura:head"   => Right(store.headDf(spark))
+        case _               => below.resolve(name)
+      }
+
+      // the same layering by name, so the gate builds no frame
+      override def cardinality(name: String): Either[Err, Cardinality] = name match {
+        case "sakura:branch" | "sakura:head" => Right(Cardinality.ConstrainedFinite)
+        case _                               => below.cardinality(name)
+      }
     }
   }
 

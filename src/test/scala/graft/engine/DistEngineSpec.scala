@@ -312,4 +312,36 @@ class DistEngineSpec extends SparkTestBase {
     assert(rel.df.filter(col("k") === 0).isEmpty)
     assert(rel.root == Hashing.contentRootOf(rel.df, rel.rowHash))
   }
+
+  test("DCL merge of two branches that each DeleteWhere then InsertFrom keeps the digest column last") {
+    // each branch's delete leaves a digest-keyed anti-join as the twin; the
+    // insert then unions it with a batch by position, and the merge unions
+    // both deltas again — every wide frame must keep RhCol trailing
+    val db0 = freshBig
+    def branch(from: Long, tag: String): Database = {
+      val del = Engine.deleteWhere(spark, db0, "big",
+        spark.range(from, from + 100).select(col("id").as("k"))).fold(e => fail(e.message), identity)
+      Engine.insertFrom(spark, del, "big",
+        spark.range(-3000L, 0L).select((col("id") * 2 + (if (tag == "l") 0 else 1)).as("k"),
+          concat(lit(tag), col("id")).as("v"))).fold(e => fail(e.message), identity)
+    }
+    val left = branch(0, "l")
+    val right = branch(1000, "r")
+    val store = new graft.dcl.Store
+    store.save(db0); store.save(left); store.save(right)
+    val (merged, conflicts) = graft.dcl.Merge.merge(spark, store, graft.dcl.Merge.PreferLeft,
+      left.hash, right.hash).fold(e => fail(e.message), identity)
+    assert(conflicts.tupleConflicts.isEmpty && conflicts.schemaConflicts.isEmpty)
+    val rel = merged.relations("big")
+    rel.ext match {
+      case Extension.Dist(_, Some(w)) => assert(w.columns.last == Engine.RhCol)
+      case other => fail(s"expected a twin-bearing Dist extension, got: $other")
+    }
+    twinExact(rel)
+    assert(rel.cardinality == n - 200 + 6000)
+    assert(rel.df.count() == rel.cardinality)
+    assert(rel.df.filter(col("k").between(0, 99) || col("k").between(1000, 1099)).isEmpty)
+    assert(rel.df.filter(col("k") < 0).count() == 6000)
+    assert(rel.root == Hashing.contentRootOf(rel.df, rel.rowHash))
+  }
 }
