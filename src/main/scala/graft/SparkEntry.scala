@@ -632,10 +632,9 @@ object SparkEntry {
     // scenario, but the row surfaces the merge RESPONSE's conflict
     // report (relation, kind, count) instead of the winning extension —
     // a strategy-resolved merge must tell the client what it resolved.
-    // Tuple conflicts are carried in the same report but are dead code
-    // on the reference's own diff definition (set differences against
-    // one LCA — see graft.dcl.Merge.Conflicts scaladoc), so the only
-    // kind this scenario (or any) can produce is 'schema'.
+    // Schema conflicts are the only kind a merge reports: the
+    // reference's tuple conflict cannot arise from diffs against one LCA
+    // (see graft.dcl.Merge.Conflicts).
     "dcl_merge_conflicts" -> ((s, dir) => {
       val session = new graft.server.EngineSession(s, Some(new ParquetCatalog(s, dir)))
       def run(st: String): String =
@@ -669,14 +668,8 @@ object SparkEntry {
       if (idx < 0)
         throw new IllegalStateException(s"merge response carried no conflict report: $msg")
       val report = msg.substring(idx + marker.length, msg.length - 1)
-      val rows = report.split("; ").toSeq.map { item =>
-        if (item.startsWith("schema conflict in "))
-          ("schema", item.stripPrefix("schema conflict in "), 1L)
-        else {
-          val n = item.takeWhile(_.isDigit)
-          ("tuple", item.substring(item.lastIndexOf(" in ") + 4), n.toLong)
-        }
-      }
+      val rows = report.split("; ").toSeq.map(item =>
+        ("schema", item.stripPrefix("schema conflict in "), 1L))
       import s.implicits._
       rows.toDF("kind", "relation", "n")
     }),
@@ -4419,7 +4412,7 @@ object SparkEntry {
     "dcl_merge_revert" ->
       "SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name FROM region",
     // the conflict report the merge response must carry: one schema
-    // conflict on `scores` (tuple conflicts are unreachable — see
+    // conflict on `scores` (the only conflict kind — see
     // graft.dcl.Merge.Conflicts)
     "dcl_merge_conflicts" ->
       "SELECT 'schema' AS kind, 'scores' AS relation, CAST(1 AS BIGINT) AS n",

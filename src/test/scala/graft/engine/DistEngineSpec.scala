@@ -305,7 +305,7 @@ class DistEngineSpec extends SparkTestBase {
     store.createBranch("l", left.hash); store.createBranch("r", right.hash)
     val (merged, conflicts) = graft.dcl.Merge.merge(spark, store, graft.dcl.Merge.PreferLeft,
       left.hash, right.hash).fold(e => fail(e.message), identity)
-    assert(conflicts.tupleConflicts.isEmpty && conflicts.schemaConflicts.isEmpty)
+    assert(conflicts.schemaConflicts.isEmpty)
     val rel = merged.relations("big")
     assert(rel.cardinality == n) // +1 −1
     assert(rel.df.filter(col("k") === -5).count() == 1)
@@ -331,7 +331,7 @@ class DistEngineSpec extends SparkTestBase {
     store.save(db0); store.save(left); store.save(right)
     val (merged, conflicts) = graft.dcl.Merge.merge(spark, store, graft.dcl.Merge.PreferLeft,
       left.hash, right.hash).fold(e => fail(e.message), identity)
-    assert(conflicts.tupleConflicts.isEmpty && conflicts.schemaConflicts.isEmpty)
+    assert(conflicts.schemaConflicts.isEmpty)
     val rel = merged.relations("big")
     rel.ext match {
       case Extension.Dist(_, Some(w)) => assert(w.columns.last == Engine.RhCol)
@@ -342,6 +342,49 @@ class DistEngineSpec extends SparkTestBase {
     assert(rel.df.count() == rel.cardinality)
     assert(rel.df.filter(col("k").between(0, 99) || col("k").between(1000, 1099)).isEmpty)
     assert(rel.df.filter(col("k") < 0).count() == 6000)
+    assert(rel.root == Hashing.contentRootOf(rel.df, rel.rowHash))
+  }
+
+  test("a rejected InsertFrom into a twin-less Dist relation releases the twin it rebuilt") {
+    // the restored shape: a Dist extension with no digest twin
+    val db0 = freshBig
+    val rel = db0.relations("big")
+    val db = Engine.updateState(db0, db0.relations.updated("big", rel.copy(ext = Extension.Dist(rel.df))))
+    val sc = spark.sparkContext
+    for ((label, rows) <- Seq("small" -> 5L, "large" -> (Engine.LocalThreshold + 1L))) {
+      // compared as id sets: the context cleaner may unpersist RDDs that
+      // earlier suites left behind while this runs
+      val before = sc.getPersistentRDDs.keySet
+      assert(Engine.insertFrom(spark, db, "big", bigDf(rows))
+        .left.exists(_.message.startsWith("DuplicateTuple")), s"$label batch must clash")
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.isEmpty, s"a duplicate $label batch leaked persisted RDD(s) $added")
+    }
+  }
+
+  test("two Local branches merging past the threshold promote with an exact digest twin") {
+    val half = Engine.LocalThreshold / 2 + 10000
+    val db0 = Engine.createRelation(spark, Engine.createDatabase(spark, "promote"),
+      "t", RelSchema(List("k" -> "integer", "v" -> "string"))).fold(e => fail(e.message), identity)
+    def branch(from: Long, tag: String): Database =
+      Engine.insertFrom(spark, db0, "t",
+        spark.range(from, from + half).select(col("id").as("k"), concat(lit(tag), col("id")).as("v")))
+        .fold(e => fail(e.message), identity)
+    val left = branch(0, "l")
+    val right = branch(half, "r")
+    assert(left.relations("t").localRows.isDefined && right.relations("t").localRows.isDefined)
+    val store = new graft.dcl.Store
+    store.save(db0); store.save(left); store.save(right)
+    val (merged, conflicts) = graft.dcl.Merge.merge(spark, store, graft.dcl.Merge.PreferLeft,
+      left.hash, right.hash).fold(e => fail(e.message), identity)
+    assert(conflicts.schemaConflicts.isEmpty)
+    val rel = merged.relations("t")
+    rel.ext match {
+      case Extension.Dist(_, Some(w)) => assert(w.columns.last == Engine.RhCol)
+      case other => fail(s"expected a twin-bearing Dist extension, got: $other")
+    }
+    twinExact(rel)
+    assert(rel.cardinality == 2L * half)
     assert(rel.root == Hashing.contentRootOf(rel.df, rel.rowHash))
   }
 }
