@@ -32,7 +32,6 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     for (n <- names.split(",").map(_.trim).filter(_.nonEmpty)) {
-      spark.catalog.clearCache()
       val df = n match {
         // INTERNAL-STAGE evidence frame (not a declared query): the
         // wedge self-join + closure probe of graph_triangles — its
@@ -66,6 +65,9 @@ object PlanDump {
         else txt.take(120000) + s"\n... [truncated ${txt.length - 120000} chars]\n" + summary
       Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), body)
       println(s"dumped $n (${txt.length} chars)")
+      // release what this name persisted (the wedge's edge sets) before
+      // the next name runs, and after the last one
+      spark.catalog.clearCache()
     }
     spark.stop()
   }

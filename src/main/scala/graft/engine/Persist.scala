@@ -1,9 +1,22 @@
 package graft.engine
 
-import scala.collection.immutable.{ListMap, VectorMap}
+import scala.collection.immutable.{ArraySeq, ListMap, VectorMap}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.{ColumnIOFactory, OutputFile}
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter,
+  RecordConsumer, RecordMaterializer}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import graft.dcl.Store
@@ -38,14 +51,20 @@ import graft.types.{Cardinality, Domain, RelSchema}
   * RELATION (unchanged relations re-reference their existing object) plus
   * two tiny manifest files; a fully-persisted snapshot short-circuits on
   * its manifest's existence, so write-through cost stays O(one changed
-  * snapshot) however long the history grows. Reloading builds relations
-  * directly over the parquet objects, so a restored Dist relation starts
-  * with a clean one-node scan plan (the "relation version = parquet
-  * snapshot" mapping of SURVEY §1.3, now durable across JVMs).
-  * Local-threshold relations verify their content root on load; Dist
-  * relations trust the content-addressed path (re-deriving a 10^9-row
-  * root at boot would scan the world — [[fsck]] is the explicit deep
-  * scan). History growth is managed by [[prune]] + [[gc]].
+  * snapshot) however long the history grows. A Local relation version is
+  * written and read on the driver by this object's own parquet codec
+  * (one snappy `part-00000.parquet` with Spark's row metadata in the
+  * footer) — no Spark job per commit or per restored version; a Dist
+  * version goes through `df.write`/`spark.read`. Both layouts are plain
+  * Spark-readable parquet, so either side reads what the other wrote.
+  * Reloading builds Dist relations directly over the parquet objects, so
+  * a restored Dist relation starts with a clean one-node scan plan (the
+  * "relation version = parquet snapshot" mapping of SURVEY §1.3, now
+  * durable across JVMs). Local-threshold relations verify their content
+  * root on load; Dist relations trust the content-addressed path
+  * (re-deriving a 10^9-row root at boot would scan the world — [[fsck]]
+  * is the explicit deep scan). History growth is managed by [[prune]] +
+  * [[gc]].
   */
 object Persist {
 
@@ -172,10 +191,159 @@ object Persist {
     if (f.exists(mp)) return
     for (rel <- db.relations.values if rel.root.count > 0) {
       val p = objectPath(root, rel.relHash)
-      if (!f.exists(new Path(p, "_SUCCESS")))
-        rel.df.write.mode("overwrite").parquet(p.toString)
+      if (!f.exists(new Path(p, "_SUCCESS"))) rel.ext match {
+        case Extension.Local(rows) => writeLocalObject(f, p, rel.struct, rows.values)
+        case Extension.Dist(df, _) => df.write.mode("overwrite").parquet(p.toString)
+      }
     }
     writeText(f, mp, renderDatabase(db).render)
+  }
+
+  // ---- driver-side parquet codec (Local relation versions) ----
+
+  /** The footer key under which Spark stores a file's Catalyst schema. */
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Parquet physical type of each persistable column type
+    * ([[typeNameOf]]'s four) — Spark's own mapping. */
+  private val Physical: Map[DataType, PrimitiveTypeName] = Map(
+    LongType -> PrimitiveTypeName.INT64, DoubleType -> PrimitiveTypeName.DOUBLE,
+    StringType -> PrimitiveTypeName.BINARY, BooleanType -> PrimitiveTypeName.BOOLEAN)
+
+  /** The parquet schema Spark would write for `struct`. */
+  private def messageOf(struct: StructType): MessageType =
+    new MessageType("spark_schema", struct.fields.toSeq.map { fl =>
+      val phys = Physical.getOrElse(fl.dataType,
+        throw new IllegalArgumentException(s"unpersistable type: ${fl.dataType}"))
+      val b = Types.primitive(phys,
+        if (fl.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED)
+      (if (fl.dataType == StringType) b.as(LogicalTypeAnnotation.stringType()) else b)
+        .named(fl.name): Type
+    }: _*)
+
+  /** Writes rows of `struct` (cells in struct order) as parquet records. */
+  private final class RowWriteSupport(struct: StructType) extends WriteSupport[Row] {
+    private val fields = struct.fields
+    private var out: RecordConsumer = _
+    def init(conf: Configuration): WriteSupport.WriteContext =
+      new WriteSupport.WriteContext(messageOf(struct), Map(SparkRowMetadata -> struct.json).asJava)
+    def prepareForWrite(rc: RecordConsumer): Unit = out = rc
+    def write(r: Row): Unit = {
+      out.startMessage()
+      for (i <- fields.indices if !r.isNullAt(i)) {
+        out.startField(fields(i).name, i)
+        fields(i).dataType match {
+          case LongType   => out.addLong(r.getLong(i))
+          case DoubleType => out.addDouble(r.getDouble(i))
+          case StringType => out.addBinary(Binary.fromString(r.getString(i)))
+          case _          => out.addBoolean(r.getBoolean(i))
+        }
+        out.endField(fields(i).name, i)
+      }
+      out.endMessage()
+    }
+  }
+
+  private final class RowWriterBuilder(file: OutputFile, struct: StructType)
+      extends ParquetWriter.Builder[Row, RowWriterBuilder](file) {
+    protected def self(): RowWriterBuilder = this
+    protected def getWriteSupport(conf: Configuration): WriteSupport[Row] =
+      new RowWriteSupport(struct)
+  }
+
+  /** Write a driver-held relation version as the object at `p`: one
+    * snappy `part-00000.parquet`, then the `_SUCCESS` marker last — the
+    * same completeness protocol as Spark's writer. A leftover directory
+    * from an interrupted write is cleared first, as Spark's overwrite
+    * mode does. */
+  private def writeLocalObject(f: FileSystem, p: Path, struct: StructType,
+      rows: Iterable[Row]): Unit = {
+    f.delete(p, true)
+    val file = HadoopOutputFile.fromPath(new Path(p, "part-00000.parquet"), f.getConf)
+    val w = new RowWriterBuilder(file, struct)
+      .withConf(f.getConf)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+    try rows.foreach(w.write) finally w.close()
+    f.create(new Path(p, "_SUCCESS"), true).close()
+  }
+
+  /** Assembles one record's cells, in requested-schema order; a cell the
+    * file leaves undefined stays null. */
+  private final class CellsMaterializer(width: Int) extends RecordMaterializer[Array[Any]] {
+    private var cells: Array[Any] = _
+    private val root = new GroupConverter {
+      private val convs: Array[Converter] = Array.tabulate(width)(i => new PrimitiveConverter {
+        override def addLong(v: Long): Unit = cells(i) = v
+        override def addDouble(v: Double): Unit = cells(i) = v
+        override def addBoolean(v: Boolean): Unit = cells(i) = v
+        override def addBinary(v: Binary): Unit = cells(i) = v.toStringUsingUTF8
+      })
+      def getConverter(i: Int): Converter = convs(i)
+      def start(): Unit = cells = new Array[Any](width)
+      def end(): Unit = ()
+    }
+    def getCurrentRecord: Array[Any] = cells
+    def getRootConverter: GroupConverter = root
+  }
+
+  /** Every row of the object at `p` on the driver, cells in `rel.struct`
+    * order, whoever wrote it: this codec's single file or Spark's
+    * multi-part output (data files are those not named `_*` or `.*`, as
+    * Spark lists them). A missing column, a wrong physical type, a null
+    * cell or an unreadable file is a Left. */
+  private def readLocalObject(f: FileSystem, p: Path,
+      rel: StoredRelation): Either[String, Vector[Row]] = {
+    val files = f.listStatus(p).toList.map(_.getPath)
+      .filterNot(q => q.getName.startsWith("_") || q.getName.startsWith("."))
+    traverse(files)(readDataFile(f.getConf, _, rel)).map(_.flatten.toVector)
+  }
+
+  private def readDataFile(conf: Configuration, file: Path,
+      rel: StoredRelation): Either[String, Vector[Row]] = {
+    val fields = rel.struct.fields.toList
+    try {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+        HadoopReadOptions.builder(conf).build())
+      try {
+        val fileSchema = reader.getFileMetaData.getSchema
+        traverse(fields) { fl =>
+          if (!fileSchema.containsField(fl.name))
+            Left(s"object of relation ${rel.name} has no column ${fl.name}: $file")
+          else {
+            val t = fileSchema.getType(fileSchema.getFieldIndex(fl.name))
+            if (t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) &&
+                Physical.get(fl.dataType).contains(t.asPrimitiveType.getPrimitiveTypeName)) Right(t)
+            else Left(s"object of relation ${rel.name}: column ${fl.name} is $t, " +
+              s"expected ${fl.dataType.simpleString}: $file")
+          }
+        }.flatMap { columns =>
+          val requested = new MessageType(fileSchema.getName, columns: _*)
+          reader.setRequestedSchema(requested)
+          val io = new ColumnIOFactory().getColumnIO(requested, fileSchema)
+          val out = Vector.newBuilder[Row]
+          var nullIn: Option[String] = None
+          var pages = reader.readNextRowGroup()
+          while (pages != null && nullIn.isEmpty) {
+            val records = io.getRecordReader(pages, new CellsMaterializer(fields.length))
+            var n = pages.getRowCount
+            while (n > 0 && nullIn.isEmpty) {
+              val cells = records.read()
+              val at = cells.indexOf(null)
+              if (at >= 0) nullIn = Some(fields(at).name)
+              else out += Row.fromSeq(ArraySeq.unsafeWrapArray(cells))
+              n -= 1
+            }
+            pages = reader.readNextRowGroup()
+          }
+          nullIn.map(c => s"object of relation ${rel.name} has a null cell in column $c: $file")
+            .toLeft(out.result())
+        }
+      } finally reader.close()
+    } catch {
+      case NonFatal(e) => Left(s"unreadable object of relation ${rel.name}: $file: $e")
+    }
   }
 
   /** Persist the whole session state: every stored snapshot, the branch
@@ -319,27 +487,29 @@ object Persist {
     } yield rel
 
   /** Rebuild a relation's extension from its content-addressed object.
-    * Small relations come back Local (rows re-keyed by tuple hash, sorted
-    * for determinism) with the root VERIFIED against the manifest; large
-    * ones come back as a Dist plan over the parquet object — fresh
-    * lineage, verified lazily by the content-addressed path name. The
-    * cache (keyed by relation hash) makes a multi-snapshot restore load
-    * and verify each distinct relation version exactly once. */
+    * Small relations are read on the driver with no Spark job, whoever
+    * wrote the object (this codec, or Spark for a Dist version that later
+    * shrank, or an older store), and come back Local (rows re-keyed by
+    * tuple hash, sorted for determinism) with the root VERIFIED against
+    * the manifest; large ones come back as a Dist plan over the parquet
+    * object through `spark.read` — fresh lineage, verified lazily by the
+    * content-addressed path name. The cache (keyed by relation hash) makes
+    * a multi-snapshot restore load and verify each distinct relation
+    * version exactly once. */
   private def loadExtension(spark: SparkSession, root: String,
       rel: StoredRelation, cache: mutable.Map[String, Extension]): Either[String, StoredRelation] = {
     if (rel.root.count == 0) Right(rel)
     else cache.get(rel.relHash) match {
       case Some(ext) => Right(rel.copy(ext = ext))
       case None =>
+        val f = fs(spark, root)
         val p = objectPath(root, rel.relHash)
-        if (!fs(spark, root).exists(new Path(p, "_SUCCESS")))
+        if (!f.exists(new Path(p, "_SUCCESS")))
           Left(s"missing object for relation ${rel.name}: $p")
         else {
-          val df = spark.read.parquet(p.toString)
-            .select(rel.struct.fields.toIndexedSeq.map(f => col(s"`${f.name}`")): _*)
           val extE: Either[String, Extension] =
-            if (rel.root.count <= Engine.LocalThreshold) {
-              val keyed = df.collect().toSeq
+            if (rel.root.count <= Engine.LocalThreshold) readLocalObject(f, p, rel).flatMap { rows =>
+              val keyed = rows
                 .map(r => Hashing.tupleHash(rel.name, Engine.rowToAttrs(rel, r)) -> r)
                 .sortBy(_._1)
               val rebuilt = keyed.foldLeft(ContentRoot.empty) { case (acc, (h, _)) => acc.add(h) }
@@ -347,7 +517,8 @@ object Persist {
                 Left(s"content root mismatch for relation ${rel.name}: " +
                   s"stored ${rel.root.render}, rebuilt ${rebuilt.render}")
               else Right(Extension.Local(VectorMap.from(keyed)))
-            } else Right(Extension.Dist(df))
+            } else Right(Extension.Dist(spark.read.parquet(p.toString)
+              .select(rel.struct.fields.toIndexedSeq.map(fl => col(s"`${fl.name}`")): _*)))
           extE.map { ext => cache(rel.relHash) = ext; rel.copy(ext = ext) }
         }
     }

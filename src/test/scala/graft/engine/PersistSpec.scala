@@ -301,6 +301,149 @@ class PersistSpec extends SparkTestBase {
     assert(err.getMessage.contains("unpersistable domain bounded"))
   }
 
+  test("a disk commit of a Local relation runs no Spark job") {
+    val dir = tmpDir()
+    val s1 = new EngineSession(spark, persistDir = Some(dir))
+    exec(s1, "(CreateDatabase g)")
+    exec(s1, "(CreateRelation (name t) (schema ((k integer) (s string))))")
+    exec(s1, "(InsertTuple (relation t) (attributes ((k (Int 1)) (s (Str a)))))")
+    val (_, insertJobs) = graft.JobCounter.count(spark)(
+      exec(s1, "(InsertTuple (relation t) (attributes ((k (Int 2)) (s (Str b)))))"))
+    assert(insertJobs === 0)
+    val (_, deleteJobs) = graft.JobCounter.count(spark)(
+      exec(s1, "(DeleteTuple (relation t) (attributes ((k (Int 1)) (s (Str a)))))"))
+    assert(deleteJobs === 0)
+    assert(new EngineSession(spark, persistDir = Some(dir)).db.hash === s1.db.hash)
+  }
+
+  test("restoring a store of Local relations runs no Spark job") {
+    val dir = tmpDir()
+    val s1 = new EngineSession(spark, persistDir = Some(dir))
+    exec(s1, "(CreateDatabase g)")
+    exec(s1, "(CreateRelation (name t) (schema ((k integer) (s string))))")
+    for (k <- 1 to 3)
+      exec(s1, s"(InsertTuple (relation t) (attributes ((k (Int $k)) (s (Str v$k)))))")
+    exec(s1, "(DeleteTuple (relation t) (attributes ((k (Int 2)) (s (Str v2)))))")
+    val (s2, jobs) = graft.JobCounter.count(spark)(new EngineSession(spark, persistDir = Some(dir)))
+    assert(jobs === 0)
+    assert(s2.db.hash === s1.db.hash)
+    assert(s2.db.relations("t").localRows.get.keySet === s1.db.relations("t").localRows.get.keySet)
+  }
+
+  // ---- the driver-side codec ----
+
+  import org.apache.spark.sql.Row
+  import scala.collection.immutable.{ListMap, VectorMap}
+  import graft.hashing.Hashing
+  import graft.hashing.Hashing.ContentRoot
+  import graft.types.{Domain, RelSchema}
+
+  // the prelude plus `boolean`, which only programmatic registration reaches
+  private val domains = Domain.prelude + ("boolean" -> Domain.boolean)
+
+  private def localRel(name: String, attrs: List[(String, String)], rows: Seq[Row]): StoredRelation = {
+    val schema = RelSchema(attrs)
+    val rel0 = StoredRelation(name, schema, schema.toStruct(domains).toOption.get,
+      Extension.emptyLocal, ContentRoot.empty)
+    val keyed = rows.map(r => Hashing.tupleHash(name, Engine.rowToAttrs(rel0, r)) -> r)
+    rel0.copy(ext = Extension.Local(VectorMap.from(keyed)),
+      root = keyed.foldLeft(ContentRoot.empty)((acc, kv) => acc.add(kv._1)))
+  }
+
+  private def dbOf(rels: StoredRelation*): Database = {
+    val db = Database("g", ListMap(rels.map(r => r.name -> r): _*), domains, Nil, Nil, "")
+    db.copy(hash = Hashing.databaseHash(db.name, rels.map(_.relHash)))
+  }
+
+  private def objectDir(dir: String, rel: StoredRelation) =
+    new java.io.File(dir, s"objects/${rel.relHash}.parquet")
+
+  private val supplementary = "a\uD83D\uDE00z" // U+1F600, a surrogate pair in UTF-16
+
+  test("every persistable type roundtrips through the driver codec, edge values included") {
+    val dir = tmpDir()
+    val rels = Seq(
+      localRel("longs", List("v" -> "integer"),
+        Seq(Long.MinValue, Long.MaxValue, 0L, -1L).map(Row(_))),
+      localRel("doubles", List("v" -> "rational"),
+        Seq(-0.0, 0.0, Double.NaN, Double.MinPositiveValue, Double.MaxValue, -1.5).map(Row(_))),
+      localRel("strings", List("v" -> "string"), Seq(supplementary, "", "plain").map(Row(_))),
+      localRel("booleans", List("v" -> "boolean"), Seq(true, false).map(Row(_))))
+    val db = dbOf(rels: _*)
+    Persist.saveSnapshot(spark, dir, db)
+    for (rel <- rels)
+      assert(objectDir(dir, rel).list().toSet === Set("part-00000.parquet", "_SUCCESS",
+        ".part-00000.parquet.crc", "._SUCCESS.crc"), "one data file, marker written")
+    val loaded = Persist.loadSnapshot(spark, dir, db.hash).fold(e => fail(s"load failed: $e"), identity)
+    assert(loaded.hash === db.hash)
+    for (rel <- rels) {
+      val back = loaded.relations(rel.name)
+      assert(back.root === rel.root)
+      assert(back.localRows.get.keySet === rel.localRows.get.keySet, rel.name)
+    }
+    // the digest renders -0.0 and NaN, but pin the raw bits too
+    val bits = loaded.relations("doubles").localRows.get.values
+      .map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(0))).toSet
+    assert(bits === rels(1).localRows.get.values
+      .map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(0))).toSet)
+    assert(loaded.relations("strings").localRows.get.values.map(_.getString(0)).toSet
+      .contains(supplementary))
+  }
+
+  test("an object in Spark's multi-part nullable layout (older stores) restores to the same hash") {
+    val dir = tmpDir()
+    val s1 = new EngineSession(spark, persistDir = Some(dir))
+    exec(s1, "(CreateDatabase g)")
+    exec(s1, "(CreateRelation (name t) (schema ((k integer) (s string) (x rational))))")
+    for (k <- 1 to 6)
+      exec(s1, s"(InsertTuple (relation t) (attributes ((k (Int $k)) (s (Str v$k)) (x (Float $k.5)))))")
+    val rel = s1.db.relations("t")
+    val obj = objectDir(dir, rel)
+    rel.df.repartition(3).write.mode("overwrite").parquet(obj.toString)
+    assert(obj.list().count(n => n.startsWith("part-") && n.endsWith(".parquet")) > 1)
+    val s2 = new EngineSession(spark, persistDir = Some(dir))
+    assert(s2.db.hash === s1.db.hash)
+    assert(query(s2, "(Base t)") === query(s1, "(Base t)"))
+  }
+
+  test("Spark reads a driver-written object as the relation, and fsck finds it healthy") {
+    val dir = tmpDir()
+    val rel = localRel("t", List("k" -> "integer", "x" -> "rational", "s" -> "string", "b" -> "boolean"),
+      Seq(Row(1L, 0.5, "one", true), Row(2L, -2.25, supplementary, false), Row(Long.MaxValue, 1e300, "", true)))
+    val db = dbOf(rel)
+    Persist.saveSnapshot(spark, dir, db)
+    val df = spark.read.parquet(objectDir(dir, rel).toString)
+    assert(df.schema.fields.map(f => f.name -> f.dataType).toSeq ===
+      rel.struct.fields.map(f => f.name -> f.dataType).toSeq)
+    def sorted(rows: Iterable[Row]) = rows.map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    assert(sorted(df.collect()) === sorted(rel.localRows.get.values))
+    assert(Persist.fsck(spark, dir) === Right(Seq.empty))
+  }
+
+  test("a foreign object with a null cell, a missing column, a wrong type or no parquet at all fails the boot with a typed message") {
+    import spark.implicits._
+    def bootWith(write: String => Unit): String = {
+      val dir = tmpDir()
+      val s1 = new EngineSession(spark, persistDir = Some(dir))
+      exec(s1, "(CreateDatabase g)")
+      exec(s1, "(CreateRelation (name a) (schema ((x integer))))")
+      exec(s1, "(InsertTuple (relation a) (attributes ((x (Int 1)))))")
+      write(objectDir(dir, s1.db.relations("a")).toString)
+      intercept[IllegalStateException](new EngineSession(spark, persistDir = Some(dir))).getMessage
+    }
+    val nullCell = bootWith(Seq(Option.empty[Long]).toDF("x").write.mode("overwrite").parquet(_))
+    assert(nullCell.contains("null cell in column x"), nullCell)
+    val missing = bootWith(Seq(1L).toDF("y").write.mode("overwrite").parquet(_))
+    assert(missing.contains("has no column x"), missing)
+    val wrongType = bootWith(Seq("1").toDF("x").write.mode("overwrite").parquet(_))
+    assert(wrongType.contains("column x is") && wrongType.contains("expected bigint"), wrongType)
+    val notParquet = bootWith { obj =>
+      new java.io.File(obj, ".part-00000.parquet.crc").delete()
+      Files.write(java.nio.file.Paths.get(obj, "part-00000.parquet"), "not parquet".getBytes)
+    }
+    assert(notParquet.contains("unreadable object of relation a"), notParquet)
+  }
+
   test("constraint bodies roundtrip through the sexp renderer") {
     val bodies = Seq(
       "(MemberOf (target dept) (binding ((dept_id (Var dept_id)) (k (Const (Int 5))))))",
