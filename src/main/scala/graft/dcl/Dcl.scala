@@ -74,25 +74,20 @@ object Diff {
   import scala.collection.immutable.VectorMap
   import org.apache.spark.sql.types.StructType
 
-  /** Row set as either a local hash→row map or a lazy DataFrame. */
+  /** Row set as either a local hash→row map or a lazy Dist frame that
+    * carries each row's digest, so neither form re-hashes downstream. */
   final case class Delta(ext: Extension, struct: StructType) {
     def df: DataFrame = ext match {
       case Extension.Local(rows) =>
         org.apache.spark.sql.SparkSession.active.createDataFrame(rows.values.toSeq.asJava, struct)
-      case Extension.Dist(d, _) => d
+      case d: Extension.Dist => d.df
     }
     def local: Option[VectorMap[String, Row]] = ext match {
       case Extension.Local(rows) => Some(rows)
       case _                     => None
     }
-    /** Digest-carrying view (rows + [[Engine.RhCol]]): the Dist twin when
-      * maintained, the keyed driver map for Local deltas (keys ARE the
-      * digests), else rows hashed lazily via `rh` on first use. */
-    def wideDf(rh: org.apache.spark.sql.Column): DataFrame = ext match {
-      case Extension.Dist(_, Some(w)) => w
-      case Extension.Dist(d, None)    => d.withColumn(Engine.RhCol, rh)
-      case Extension.Local(rows)      => Engine.wideFrame(rows, struct)
-    }
+    /** Digest-carrying view (rows + [[Engine.RhCol]], [[Engine.wideOf]]). */
+    def wideDf: DataFrame = Engine.wideOf(ext, struct)
   }
 
   sealed trait RelationDiff { def name: String }
@@ -121,11 +116,11 @@ object Diff {
                 removed = Delta(Extension.Local(ar.filter { case (h, _) => !tr.contains(h) }), a.struct),
                 schemaChanged = false))
             case _ =>
-              // digest-keyed deltas: both sides read their digest twin
-              // (materialized for bulk-built relations — zero sha here;
-              // one lazy hash pass otherwise, same cost the row-equality
-              // anti-join paid). Exact: relations are null-free and the
-              // canonical digest encoding is injective on raw values, so
+              // digest-keyed deltas: both sides read their digest column
+              // (materialized for relations the engine built — zero sha
+              // here; one lazy hash pass for a restored one). Exact:
+              // relations are null-free and the canonical digest
+              // encoding is injective on raw values, so
               // digest-equality IS attribute-equality. The deltas come
               // back WITH their digests, so merge assembly and root
               // arithmetic downstream never re-hash them.
@@ -135,8 +130,8 @@ object Diff {
               val addedW = Engine.digestJoin(tw, aw.select(col(Engine.RhCol)), "left_anti")
               val removedW = Engine.digestJoin(aw, tw.select(col(Engine.RhCol)), "left_anti")
               Some(RelationModified(name,
-                added = Delta(Extension.Dist(addedW.drop(Engine.RhCol), Some(addedW)), t.struct),
-                removed = Delta(Extension.Dist(removedW.drop(Engine.RhCol), Some(removedW)), a.struct),
+                added = Delta(Extension.Dist(addedW), t.struct),
+                removed = Delta(Extension.Dist(removedW), a.struct),
                 schemaChanged = false))
           }
         case (None, None) => None
@@ -281,7 +276,7 @@ object Merge {
 
       // any distributed row set: the same equation on digest-keyed wide
       // frames. The deltas come back from Diff.diff WITH digests and the
-      // base contributes its twin, so nothing is re-hashed, and the root
+      // base contributes its own, so nothing is re-hashed, and the root
       // is two delta-sized digest aggregations.
       case _ =>
         import org.apache.spark.sql.functions.col
@@ -291,8 +286,8 @@ object Merge {
         // relation: cut it once (it is diff-sized). Local deltas already
         // live on the driver.
         def wide(d: Diff.Delta): DataFrame = d.ext match {
-          case _: Extension.Local => d.wideDf(base.rowHash)
-          case _                  => graft.operators.Checkpoints.cut(d.wideDf(base.rowHash))
+          case _: Extension.Local => d.wideDf
+          case _                  => graft.operators.Checkpoints.cut(d.wideDf)
         }
         val lAddW = wide(lAdd)
         val rems = digestsOf(wide(lRem)).unionAll(digestsOf(wide(rRem)))
@@ -303,7 +298,7 @@ object Merge {
         val addRoot = Hashing.contentRootOf(adds, col(Engine.RhCol))
         // a merge stacks several union/anti nodes — bound the plan chain
         // (the digest column rides the checkpoint)
-        val (ext, chain) = Engine.boundedDistWide(mergedW, base.chain, cost = 4)
+        val (ext, chain) = Engine.boundedDist(mergedW, base.chain, cost = 4)
         base.copy(ext = ext, root = base.root.subtract(remRoot).merge(addRoot), chain = chain)
     }
 }

@@ -33,26 +33,23 @@ sealed trait Extension
 object Extension {
   final case class Local(rows: VectorMap[String, Row]) extends Extension
 
-  /** @param withRh OPTIONAL digest-carrying twin: exactly `df`'s rows plus
-    *   a trailing [[Engine.RhCol]] column holding each row's content
-    *   digest, sharing `df`'s cached/checkpointed blocks (both views are
-    *   projections of ONE materialization). Every stored-side digest
-    *   consumer — bulk-insert clash probes, DCL version diffs, merge
-    *   assembly, content-root arithmetic — reads this column instead of
-    *   re-running sha-256 over the whole relation per operation (the r16
-    *   verdict's top scale-killer: O(n) re-hash per append, O(n²) across a
-    *   session).
-    *
-    *   Producers: the bulk insert's persisted batch; [[Engine.promote]],
-    *   which every Local→Dist promotion takes (single insert, small
-    *   `InsertFrom`, DCL merge); single inserts, deletes and `DeleteWhere`
-    *   on a relation that has a twin; the digest-keyed DCL merge; and the
-    *   rebuild an `InsertFrom` into a twin-less relation pays once. `None`
-    *   (the default) means "derive on demand": a constructor that cannot
-    *   cheaply prove the invariant leaves it unset — `Persist`'s restored
-    *   frames over parquet do — and pays one lazy sha pass on first use,
-    *   so staleness is unrepresentable: a twin is either absent or exact. */
-  final case class Dist(df: DataFrame, withRh: Option[DataFrame] = None) extends Extension
+  /** @param wide the declared columns plus a trailing [[Engine.RhCol]]
+    *   column holding each row's content digest. Every stored-side digest
+    *   consumer (bulk-insert clash probes, DCL version diffs, merge
+    *   assembly, content-root arithmetic, single-tuple probes) reads this
+    *   column. A relation the engine built carries MATERIALIZED digests:
+    *   the bulk insert's persisted batch, [[Engine.promote]]'s driver map
+    *   (its keys are the digests), and every single-tuple, `DeleteWhere`
+    *   and merge result derived from them, all sharing one
+    *   cached/checkpointed block set with [[df]]. A relation `Persist`
+    *   restored carries a LAZY projection of [[StoredRelation.rowHash]]
+    *   over its parquet scan: Catalyst prunes it from every read that never
+    *   touches the digest, so only digest consumers pay the sha pass. */
+  final case class Dist(wide: DataFrame) extends Extension {
+    /** The declared columns. A lazy val, so every read of one extension
+      * sees one analyzed Dataset. */
+    lazy val df: DataFrame = wide.drop(Engine.RhCol)
+  }
   val emptyLocal: Local = Local(VectorMap.empty)
 }
 
@@ -79,7 +76,7 @@ final case class StoredRelation(
     * [[LocalFrames]], which pays that once per relation version. */
   def df: DataFrame = ext match {
     case Extension.Local(rows) => LocalFrames.frame(SparkSession.active, this, rows)
-    case Extension.Dist(d, _) => d
+    case d: Extension.Dist     => d.df
   }
 
   def localRows: Option[VectorMap[String, Row]] = ext match {
@@ -88,15 +85,8 @@ final case class StoredRelation(
   }
 
   /** Digest-carrying view of the extension: declared columns plus a
-    * trailing [[Engine.RhCol]] digest column. Local relations build it
-    * from the driver map (the keys ARE the digests — zero compute); Dist
-    * relations return the maintained twin when present (materialized
-    * digests, no sha), else a lazy plan that hashes on first use. */
-  def wideDf: DataFrame = ext match {
-    case Extension.Local(rows)      => Engine.wideFrame(rows, struct)
-    case Extension.Dist(_, Some(w)) => w
-    case Extension.Dist(d, None)    => d.withColumn(Engine.RhCol, rowHash)
-  }
+    * trailing [[Engine.RhCol]] digest column ([[Engine.wideOf]]). */
+  def wideDf: DataFrame = Engine.wideOf(ext, struct)
 }
 
 final case class DeferredEntry(constraintName: String, relationName: String, body: Body)
@@ -121,10 +111,11 @@ final case class Database(
   * tuple lifecycle with full validation, plus system-catalog maintenance.
   *
   * Scale design: single-tuple protocol ops (InsertTuple/DeleteTuple) cost
-  * one filtered scan of the target relation (attribute-equality predicates,
-  * so parquet-backed relations get pushdown); bulk ops (InsertFrom, Assign,
-  * DeleteWhere) are set-wise DataFrame jobs — duplicate detection via
-  * aggregation/join, deletion via anti-join — never a per-row driver loop.
+  * one filtered scan of the target relation (a digest predicate behind
+  * attribute-equality predicates, so parquet-backed relations get
+  * pushdown); bulk ops (InsertFrom, Assign, DeleteWhere) are set-wise
+  * DataFrame jobs — duplicate detection via aggregation/join, deletion
+  * via anti-join — never a per-row driver loop.
   * The reference materializes query results and folds row-by-row
   * (lib/dml/executor.ml:79-126); the outcome is identical because any
   * per-row failure aborts the whole statement there too.
@@ -177,40 +168,39 @@ object Engine {
       wideStruct(struct))
 
   /** Graduate a driver map that crossed [[LocalThreshold]] to a Dist
-    * extension. The twin comes free: the map's keys ARE the digests. */
-  private[graft] def promote(rows: VectorMap[String, Row], struct: StructType): Extension = {
-    val wide = wideFrame(rows, struct)
-    Extension.Dist(wide.drop(RhCol), Some(wide))
+    * extension. The digest column comes free: the map's keys ARE the
+    * digests. */
+  private[graft] def promote(rows: VectorMap[String, Row], struct: StructType): Extension =
+    Extension.Dist(wideFrame(rows, struct))
+
+  /** An extension's digest-carrying view. Local relations build it from
+    * the driver map (the keys ARE the digests, zero compute); Dist
+    * relations carry it. */
+  private[graft] def wideOf(ext: Extension, struct: StructType): DataFrame = ext match {
+    case Extension.Local(rows) => wideFrame(rows, struct)
+    case Extension.Dist(w)     => w
   }
 
   /** Semi- or anti-join of a frame carrying [[RhCol]] against a frame of
     * digests, keyed on the digest. Spark's `USING` join emits the key
     * column first; this keeps `wide`'s own column order, so the result
     * still unions by position with other wide frames and keeps the
-    * trailing [[RhCol]] that [[Extension.Dist]]'s twin promises. Every
+    * trailing [[RhCol]] that [[Extension.Dist]] promises. Every
     * digest-keyed join goes through here. */
   private[graft] def digestJoin(wide: DataFrame, digests: DataFrame, how: String): DataFrame = {
     require(how == "left_semi" || how == "left_anti", s"digestJoin keeps the left side only: $how")
     wide.join(digests, Seq(RhCol), how).select(wide.columns.toIndexedSeq.map(c => col(s"`$c`")): _*)
   }
 
-  /** Wrap a mutated Dist plan, checkpointing once the accumulated chain
-    * depth passes [[MaxPlanChain]]. Returns the new extension plus the
-    * relation's new chain depth. */
-  private[graft] def boundedDist(df: DataFrame, prevChain: Int, cost: Int = 1): (Extension, Int) =
-    if (prevChain + cost >= MaxPlanChain) (Extension.Dist(df.localCheckpoint(true)), 0)
-    else (Extension.Dist(df), prevChain + cost)
-
-  /** [[boundedDist]] for a digest-carrying wide plan (declared columns +
-    * [[RhCol]]): the chain checkpoint materializes raw rows AND digests
-    * into ONE block set, and both views re-anchor on it — the digest
-    * column survives every truncation, so no consumer ever re-hashes the
-    * stored side. */
-  private[graft] def boundedDistWide(wide: DataFrame, prevChain: Int, cost: Int = 1): (Extension, Int) =
-    if (prevChain + cost >= MaxPlanChain) {
-      val cp = wide.localCheckpoint(true)
-      (Extension.Dist(cp.drop(RhCol), Some(cp)), 0)
-    } else (Extension.Dist(wide.drop(RhCol), Some(wide)), prevChain + cost)
+  /** Wrap a mutated wide Dist plan (declared columns + [[RhCol]]),
+    * checkpointing once the accumulated chain depth passes
+    * [[MaxPlanChain]]: the checkpoint materializes raw rows AND digests
+    * into ONE block set, so the digest column survives every truncation
+    * and no consumer re-hashes the stored side. Returns the new extension
+    * plus the relation's new chain depth. */
+  private[graft] def boundedDist(wide: DataFrame, prevChain: Int, cost: Int = 1): (Extension, Int) =
+    if (prevChain + cost >= MaxPlanChain) (Extension.Dist(wide.localCheckpoint(true)), 0)
+    else (Extension.Dist(wide), prevChain + cost)
 
   // ---- schema / value admission (reference build_membership_criteria,
   // lib/manipulation.ml:20-33: integer/natural/string enforced, anything
@@ -260,8 +250,23 @@ object Engine {
 
   private def rowOf(coerced: Seq[(String, Value)]): Row = Row.fromSeq(coerced.map(_._2.any))
 
-  private def eqPredicate(coerced: Seq[(String, Value)]): Column =
-    coerced.map { case (a, v) => col(s"`$a`") === v.lit }.reduce(_ && _)
+  /** The one predicate that picks the stored tuple with digest `h` out of
+    * a wide frame: `RhCol === h` behind an equality prefilter on the
+    * NON-double attributes. The prefilter is pushed to the source, so a
+    * restored relation hashes only the rows that pass it. Doubles stay out:
+    * `===` equates 0.0 and -0.0 where the digest does not, and constant
+    * propagation can then fold the literal into the digest expression and
+    * drop the digest conjunct, matching a 0.0 row for a -0.0 tuple. */
+  private def tupleMatch(rel: StoredRelation, coerced: Seq[(String, Value)], h: String): Column =
+    coerced.collect { case (a, v) if rel.struct(a).dataType != DoubleType => col(s"`$a`") === v.lit }
+      .foldRight(col(s"`$RhCol`") === h)(_ && _)
+
+  /** The stored rows equal to one tuple (at most one: relations are
+    * sets) — the duplicate probe of [[createTuple]] and the presence
+    * check of [[retractTuple]]. */
+  private[engine] def tupleProbe(rel: StoredRelation, wide: DataFrame,
+      coerced: Seq[(String, Value)], h: String): DataFrame =
+    wide.where(tupleMatch(rel, coerced, h)).drop(RhCol)
 
   private[graft] def updateState(db: Database, relations: ListMap[String, StoredRelation]): Database = {
     val newHash = Hashing.databaseHash(db.name, relations.values.map(_.relHash))
@@ -279,8 +284,7 @@ object Engine {
   /** Insert one tuple: membership criteria → named constraints →
     * duplicate rejection → new state → cascade recheck. On a Local
     * relation the duplicate check is an O(1) driver map probe — no Spark
-    * job; on a Dist relation it is one filtered scan with attribute
-    * predicates pushed to the source. */
+    * job; on a Dist relation it is one filtered scan ([[tupleProbe]]). */
   def createTuple(spark: SparkSession, db: Database, relName: String,
       attrs: Seq[(String, Value)]): Either[Err, Database] =
     for {
@@ -297,23 +301,10 @@ object Engine {
             if (m.size > LocalThreshold) Right((promote(m, rel.struct), 0))
             else Right((Extension.Local(m): Extension, rel.chain))
           }
-        case Extension.Dist(d, w) =>
-          // duplicate probe: one narrow scan of the materialized digest
-          // twin when present (h identifies the row exactly), else the
-          // attribute-predicate scan (pushdown-friendly on parquet)
-          val dup = rel.root.count > 0 && (w match {
-            case Some(ww) => !ww.where(col(s"`$RhCol`") === h).isEmpty
-            case None     => !d.filter(eqPredicate(coerced)).isEmpty
-          })
-          if (dup) Left(Err.DuplicateTuple(h))
-          else w match {
-            case Some(ww) =>
-              val rowWide = wideFrame(Seq(h -> rowOf(coerced)), rel.struct)
-              Right(boundedDistWide(ww.unionAll(rowWide), rel.chain))
-            case None => Right(boundedDist(
-              d.unionAll(spark.createDataFrame(java.util.List.of(rowOf(coerced)), rel.struct)),
-              rel.chain))
-          }
+        case Extension.Dist(w) =>
+          // duplicate probe: one filtered scan (h identifies the row exactly)
+          if (rel.root.count > 0 && !tupleProbe(rel, w, coerced, h).isEmpty) Left(Err.DuplicateTuple(h))
+          else Right(boundedDist(w.unionAll(wideFrame(Seq(h -> rowOf(coerced)), rel.struct)), rel.chain))
       }
       newRel = rel.copy(ext = extChain._1, chain = extChain._2, root = rel.root.add(h))
       newDb = updateRelation(db, newRel)
@@ -347,19 +338,11 @@ object Engine {
         case Extension.Local(rows) =>
           if (!rows.contains(h)) Left(Err.TupleNotFound(h))
           else Right((Extension.Local(rows.removed(h)): Extension, rel.chain))
-        case Extension.Dist(d, w) =>
-          val present = rel.root.count > 0 && (w match {
-            case Some(ww) => !ww.where(col(s"`$RhCol`") === h).isEmpty
-            case None     => !d.filter(eqPredicate(coerced)).isEmpty
-          })
-          if (!present) Left(Err.TupleNotFound(h))
-          else w match {
-            case Some(ww) =>
-              // digest filter removes exactly the one row (h is unique
-              // within a duplicate-free relation) and keeps the twin exact
-              Right(boundedDistWide(ww.filter(col(s"`$RhCol`") =!= h), rel.chain))
-            case None => Right(boundedDist(d.filter(!eqPredicate(coerced)), rel.chain))
-          }
+        case Extension.Dist(w) =>
+          // the probe's predicate also removes exactly the one row (h is
+          // unique within a duplicate-free relation)
+          if (rel.root.count == 0 || tupleProbe(rel, w, coerced, h).isEmpty) Left(Err.TupleNotFound(h))
+          else Right(boundedDist(w.filter(!tupleMatch(rel, coerced, h)), rel.chain))
       }
       newRel = rel.copy(ext = extChain._1, chain = extChain._2, root = rel.root.remove(h))
       newDb = updateRelation(db, newRel)
@@ -590,36 +573,22 @@ object Engine {
             else
               Right(updateRelation(db, rel.copy(ext = Extension.Local(merged), root = root)))
         }
-      case Extension.Dist(d, w) =>
+      case Extension.Dist(w) =>
         // small batch into a large relation: one semi probe keyed on the
-        // 32-byte digest, with the tiny batch key set broadcast — reads
-        // the maintained digest twin when present. When absent, the twin
-        // is rebuilt behind a LAZY cut that the probe itself materializes,
-        // so the full-relation re-hash this probe used to pay on EVERY
-        // small batch is paid at most once per relation lifetime. A
-        // rejected batch releases the twin it rebuilt.
+        // 32-byte digest, with the tiny batch key set broadcast
         val keySchema = StructType(Seq(StructField(RhCol, StringType)))
         val keysDf = SparkSession.active.createDataFrame(
           hashed.keysIterator.map(Row(_)).toSeq.asJava, keySchema)
-        val storedW = w.getOrElse(twinOf(rel, d))
-        val clash = digestJoin(storedW.select(col(s"`$RhCol`")), broadcast(keysDf), "left_semi")
+        val clash = digestJoin(w.select(col(s"`$RhCol`")), broadcast(keysDf), "left_semi")
           .limit(1).collect()
-        if (clash.nonEmpty) {
-          if (w.isEmpty) graft.operators.Checkpoints.release(storedW)
-          Left(Err.DuplicateTuple(clash.head.getString(0)))
-        } else {
-          val batchWide = wideFrame(hashed, rel.struct)
+        if (clash.nonEmpty) Left(Err.DuplicateTuple(clash.head.getString(0)))
+        else {
           val root = hashed.keysIterator.foldLeft(rel.root)(_.add(_))
-          val (ext, chain) = boundedDistWide(storedW.unionAll(batchWide), rel.chain)
+          val (ext, chain) = boundedDist(w.unionAll(wideFrame(hashed, rel.struct)), rel.chain)
           Right(updateRelation(db, rel.copy(ext = ext, root = root, chain = chain)))
         }
     }
   }
-
-  /** Rebuild a twin-less Dist relation's digest twin behind a lazy cut:
-    * the first read materializes it, later reads hit blocks. */
-  private def twinOf(rel: StoredRelation, d: DataFrame): DataFrame =
-    d.withColumn(RhCol, rel.rowHash).localCheckpoint(false)
 
   /** Balance + persist a large bulk source WITH its digest column (the
     * wide frame: declared columns + [[RhCol]]): the set-wise insert makes
@@ -645,8 +614,8 @@ object Engine {
 
   /** Large-result insert over the persisted wide batch: set-wise
     * validation, dup-check and clash probe — all digest work reads the
-    * batch's stored [[RhCol]] column; the stored side contributes its
-    * maintained digest twin (or rebuilds it once, behind a lazy cut).
+    * batch's stored [[RhCol]] column, and the stored side contributes its
+    * own.
     *
     * Membership validation is a full batch scan; the constrained path
     * (insertFromConstrained) has ALREADY run it by the time it calls
@@ -667,31 +636,18 @@ object Engine {
         case Some(h) => Left(Err.DuplicateTuple(h))
         case None    => Right(())
       }
-      // stored-side digests for the clash probe AND the new twin: the
-      // maintained twin when present; rebuilt behind a lazy cut (the
-      // probe materializes it, and it STICKS — the next insert reads
-      // blocks) when this relation predates digest maintenance
-      (storedW, rebuilt) =
-        if (rel.root.count == 0) (None, false)
-        else rel.ext match {
-          case Extension.Dist(_, Some(ww)) => (Some(ww), false)
-          case Extension.Dist(d, None)     => (Some(twinOf(rel, d)), true)
-          case Extension.Local(_)          => (Some(rel.wideDf), false) // driver-local, broadcastable
-        }
+      // stored-side digests for the clash probe and the new extension (a
+      // Local relation's wide frame is driver-local, broadcastable)
+      storedW = if (rel.root.count == 0) None else Some(rel.wideDf)
       _ <- storedW match {
         case None => Right(())
         case Some(sw) =>
           val clash = digestJoin(wide.select(col(s"`$RhCol`")),
             sw.select(col(s"`$RhCol`")), "left_semi").limit(1).collect()
-          if (clash.isEmpty) Right(())
-          else {
-            // a rejected batch releases the twin it rebuilt
-            if (rebuilt) graft.operators.Checkpoints.release(sw)
-            Left(Err.DuplicateTuple(clash.head.getString(0)))
-          }
+          if (clash.isEmpty) Right(()) else Left(Err.DuplicateTuple(clash.head.getString(0)))
       }
       newWide = storedW.map(_.unionAll(wide)).getOrElse(wide)
-      extChain = boundedDistWide(newWide, rel.chain)
+      extChain = boundedDist(newWide, rel.chain)
       newRel = rel.copy(ext = extChain._1, chain = extChain._2, root = rel.root.merge(dupRoot._2))
     } yield updateRelation(db, newRel)
   }
@@ -745,20 +701,15 @@ object Engine {
           val root = keys.foldLeft(rel.root)(_.remove(_))
           Right((rel.copy(ext = Extension.Local(rows.removedAll(keys)), root = root),
             removed.map(r => Row.fromSeq(r.toSeq.take(width)))))
-        case Extension.Dist(d, w) =>
+        case Extension.Dist(w) =>
           val delRoot = Hashing.contentRootOf(toDelete, rel.rowHash)
-          val (ext, chain) = w match {
-            case Some(ww) =>
-              // digest-keyed anti: sha only over the (match-sized) delete
-              // set; the stored side reads its materialized digest column.
-              // Exact equivalence with Algebra.diff: relations are
-              // null-free and the canonical digest encoding is injective
-              // on raw values, so digest-equality IS attribute-equality.
-              val delD = toDelete.select(rel.rowHash.as(RhCol))
-              boundedDistWide(digestJoin(ww, delD, "left_anti"), rel.chain, cost = 2)
-            case None =>
-              boundedDist(graft.core.Algebra.diff(d, toDelete), rel.chain, cost = 2)
-          }
+          // digest-keyed anti: sha over the (match-sized) delete set; the
+          // stored side reads its digest column. Exact equivalence with
+          // Algebra.diff: relations are null-free and the canonical digest
+          // encoding is injective on raw values, so digest-equality IS
+          // attribute-equality.
+          val delD = toDelete.select(rel.rowHash.as(RhCol))
+          val (ext, chain) = boundedDist(digestJoin(w, delD, "left_anti"), rel.chain, cost = 2)
           Right((rel.copy(ext = ext, chain = chain,
             root = rel.root.subtract(delRoot)), Seq.empty[Row]))
       }

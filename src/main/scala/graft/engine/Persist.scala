@@ -57,13 +57,16 @@ import graft.types.{Cardinality, Domain, RelSchema}
   * footer) — no Spark job per commit or per restored version; a Dist
   * version goes through `df.write`/`spark.read`. Both layouts are plain
   * Spark-readable parquet, so either side reads what the other wrote.
-  * Reloading builds Dist relations directly over the parquet objects, so
-  * a restored Dist relation starts with a clean one-node scan plan (the
-  * "relation version = parquet snapshot" mapping of SURVEY §1.3, now
-  * durable across JVMs). Local-threshold relations verify their content
-  * root on load; Dist relations trust the content-addressed path
-  * (re-deriving a 10^9-row root at boot would scan the world — [[fsck]]
-  * is the explicit deep scan). History growth is managed by [[prune]] +
+  * Objects hold the declared columns only, never the row digest: writing
+  * a Dist version writes its `df`, and Catalyst prunes the digest column
+  * out of that write. Reloading builds Dist relations directly over the
+  * parquet objects, so a restored Dist relation starts with a clean
+  * one-node scan plan (the "relation version = parquet snapshot" mapping
+  * of SURVEY §1.3, now durable across JVMs) plus a lazy digest
+  * projection that only digest consumers evaluate. Local-threshold
+  * relations verify their content root on load; Dist relations trust the
+  * content-addressed path (re-deriving a 10^9-row root at boot would scan
+  * the world — [[fsck]] is the explicit deep scan). History growth is managed by [[prune]] +
   * [[gc]].
   */
 object Persist {
@@ -193,7 +196,7 @@ object Persist {
       val p = objectPath(root, rel.relHash)
       if (!f.exists(new Path(p, "_SUCCESS"))) rel.ext match {
         case Extension.Local(rows) => writeLocalObject(f, p, rel.struct, rows.values)
-        case Extension.Dist(df, _) => df.write.mode("overwrite").parquet(p.toString)
+        case d: Extension.Dist     => d.df.write.mode("overwrite").parquet(p.toString)
       }
     }
     writeText(f, mp, renderDatabase(db).render)
@@ -486,16 +489,28 @@ object Persist {
         name, schema, struct, Extension.emptyLocal, root0, ListMap(constraints: _*)), cache)
     } yield rel
 
+  /** A Dist extension over a relation's parquet object: the declared
+    * columns, selected by name, plus a lazy [[Engine.RhCol]] projection of
+    * the row digest. Objects store no digest; Catalyst prunes the
+    * projection from every read that does not use it, and pushes a
+    * single-tuple op's attribute prefilter below it, so only digest
+    * consumers (bulk-insert clash probes, `DeleteWhere`, DCL diff and
+    * merge) pay the sha pass. */
+  private def distOver(spark: SparkSession, p: Path, rel: StoredRelation): Extension =
+    Extension.Dist(spark.read.parquet(p.toString)
+      .select(rel.struct.fields.toIndexedSeq.map(fl => col(s"`${fl.name}`")): _*)
+      .withColumn(Engine.RhCol, rel.rowHash))
+
   /** Rebuild a relation's extension from its content-addressed object.
     * Small relations are read on the driver with no Spark job, whoever
     * wrote the object (this codec, or Spark for a Dist version that later
     * shrank, or an older store), and come back Local (rows re-keyed by
     * tuple hash, sorted for determinism) with the root VERIFIED against
     * the manifest; large ones come back as a Dist plan over the parquet
-    * object through `spark.read` — fresh lineage, verified lazily by the
-    * content-addressed path name. The cache (keyed by relation hash) makes
-    * a multi-snapshot restore load and verify each distinct relation
-    * version exactly once. */
+    * object through `spark.read` ([[distOver]]: lazy digests) — fresh
+    * lineage, verified lazily by the content-addressed path name. The
+    * cache (keyed by relation hash) makes a multi-snapshot restore load
+    * and verify each distinct relation version exactly once. */
   private def loadExtension(spark: SparkSession, root: String,
       rel: StoredRelation, cache: mutable.Map[String, Extension]): Either[String, StoredRelation] = {
     if (rel.root.count == 0) Right(rel)
@@ -517,8 +532,7 @@ object Persist {
                 Left(s"content root mismatch for relation ${rel.name}: " +
                   s"stored ${rel.root.render}, rebuilt ${rebuilt.render}")
               else Right(Extension.Local(VectorMap.from(keyed)))
-            } else Right(Extension.Dist(spark.read.parquet(p.toString)
-              .select(rel.struct.fields.toIndexedSeq.map(fl => col(s"`${fl.name}`")): _*)))
+            } else Right(distOver(spark, p, rel))
           extE.map { ext => cache(rel.relHash) = ext; rel.copy(ext = ext) }
         }
     }
@@ -599,9 +613,10 @@ object Persist {
 
   /** Re-anchor a just-persisted database on its on-disk objects: each
     * Dist relation whose content-addressed object exists comes back as a
-    * fresh parquet scan with chain 0. The snapshot write IS the durable
-    * chain checkpoint (reference persists every state —
-    * lib/storable.ml:25-36, lib/management/physical.ml:11-84): without
+    * fresh parquet scan with chain 0 and lazy digests ([[distOver]]). The
+    * snapshot write IS the durable chain checkpoint (reference persists
+    * every state — lib/storable.ml:25-36,
+    * lib/management/physical.ml:11-84): without
     * this, a write-through session re-executes a lineage that grows with
     * every mutation on each save, and the only truncation is
     * `localCheckpoint` — executor-memory resident, lost on JVM death.
@@ -613,13 +628,10 @@ object Persist {
     val f = fs(spark, root)
     val relations = db.relations.map { case (n, rel) =>
       rel.ext match {
-        case Extension.Dist(_, _) if rel.root.count > 0 =>
+        case _: Extension.Dist if rel.root.count > 0 =>
           val p = objectPath(root, rel.relHash)
-          if (f.exists(new Path(p, "_SUCCESS"))) {
-            val df = spark.read.parquet(p.toString)
-              .select(rel.struct.fields.toIndexedSeq.map(fl => col(s"`${fl.name}`")): _*)
-            n -> rel.copy(ext = Extension.Dist(df), chain = 0)
-          } else n -> rel
+          if (f.exists(new Path(p, "_SUCCESS"))) n -> rel.copy(ext = distOver(spark, p, rel), chain = 0)
+          else n -> rel
         case _ => n -> rel
       }
     }

@@ -15,11 +15,12 @@ import org.scalacheck.rng.Seed
   * so both branches sometimes add or remove the same row. Each branch
   * first inserts its own marker row, which keeps every branch state
   * unique and makes the LCA the true fork point. For each relation
-  * representation (Local, Dist with a digest twin, twin-less Dist as
-  * restored from disk) and every strategy, the merged relation must hold
-  * exactly `(base − (lRem ∪ rRem)) ∪ lAdd ∪ rAdd` computed on the driver
-  * from the three states' rows, its root must equal a recomputed one,
-  * and no conflict may be reported. */
+  * representation (Local, Dist with materialized digests as the engine
+  * builds it, Dist with lazy digests as restored from disk) and every
+  * strategy, the merged relation must hold exactly
+  * `(base − (lRem ∪ rRem)) ∪ lAdd ∪ rAdd` computed on the driver from the
+  * three states' rows, its root must equal a recomputed one, and no
+  * conflict may be reported. */
 class MergeModelSpec extends SparkTestBase {
   import MergeModelSpec._
 
@@ -43,10 +44,8 @@ class MergeModelSpec extends SparkTestBase {
     val rel = localBase.relations("t")
     val ext = shape match {
       case LocalShape => rel.ext
-      case TwinDist =>
-        val w = rel.wideDf
-        Extension.Dist(w.drop(Engine.RhCol), Some(w))
-      case BareDist => Extension.Dist(rel.df)
+      case TwinDist     => Extension.Dist(rel.wideDf)
+      case RestoredDist => Extension.Dist(rel.df.withColumn(Engine.RhCol, rel.rowHash))
     }
     Engine.updateState(localBase, localBase.relations.updated("t", rel.copy(ext = ext)))
   }
@@ -126,9 +125,9 @@ class MergeModelSpec extends SparkTestBase {
       assert(got.toSet == expected, s"$what: merged rows differ\n  l=$l\n  r=$r")
       assert(rel.root == Hashing.contentRootOf(rel.df, rel.rowHash), s"$what: merged root is not exact")
       if (i == 0) rel.ext match {
-        case Extension.Dist(_, Some(w)) =>
+        case Extension.Dist(w) =>
           assert(w.filter(!(col(Engine.RhCol) <=> rel.rowHash)).isEmpty,
-            s"$what: merged twin digests must equal the row digests")
+            s"$what: merged digests must equal the row digests")
         case _ => ()
       }
     }
@@ -162,8 +161,8 @@ class MergeModelSpec extends SparkTestBase {
     sweep(TwinDist, scenarios = 2, seed = 42L)
   }
 
-  test("random branch edits merge by the set equation on twin-less Dist relations") {
-    sweep(BareDist, scenarios = 2, seed = 43L)
+  test("random branch edits merge by the set equation on restored Dist relations") {
+    sweep(RestoredDist, scenarios = 2, seed = 43L)
   }
 }
 
@@ -171,7 +170,7 @@ object MergeModelSpec {
   sealed trait Shape
   case object LocalShape extends Shape
   case object TwinDist extends Shape
-  case object BareDist extends Shape
+  case object RestoredDist extends Shape
 
   sealed trait Edit
   final case class InsertTuple(row: (Long, String)) extends Edit

@@ -62,18 +62,18 @@ class DistEngineSpec extends SparkTestBase {
     assert(Engine.insertFrom(spark, fresh, "t", dup).left.exists(_.message.startsWith("DuplicateTuple")))
   }
 
-  /** The digest twin is exact after a mutation, or absent — never stale
-    * (Extension.Dist scaladoc). Checks both halves of the invariant:
-    * twin rows ≡ extension rows, and the STORED digest column equals a
-    * from-scratch recompute of every row's digest. */
+  /** A Dist extension's digest column is exact after every mutation —
+    * never stale (Extension.Dist scaladoc). Checks both halves of the
+    * invariant: wide rows ≡ extension rows, and the STORED digest column
+    * equals a from-scratch recompute of every row's digest. */
   private def twinExact(rel: StoredRelation): Unit = rel.ext match {
-    case Extension.Dist(_, Some(w)) =>
+    case Extension.Dist(w) =>
       assert(w.filter(!(col(Engine.RhCol) <=> rel.rowHash)).isEmpty,
         "stored digest must equal the recomputed row digest")
       val raw = w.drop(Engine.RhCol)
       assert(raw.exceptAll(rel.df).isEmpty && rel.df.exceptAll(raw).isEmpty,
-        "twin rows must equal the extension rows")
-    case other => fail(s"expected a twin-bearing Dist extension, got: $other")
+        "wide rows must equal the extension rows")
+    case other => fail(s"expected a Dist extension, got: $other")
   }
 
   test("digest twin stays exact through bulk insert, append, single ops, and delete") {
@@ -270,7 +270,7 @@ class DistEngineSpec extends SparkTestBase {
     // force a small Dist extension directly (the regime under test)
     val rel0 = db.relations("t")
     db = Engine.updateState(db,
-      db.relations.updated("t", rel0.copy(ext = Extension.Dist(rel0.df), chain = 0)))
+      db.relations.updated("t", rel0.copy(ext = Extension.Dist(rel0.wideDf), chain = 0)))
     val mutations = 200
     for (i <- 0 until mutations) {
       db = Engine.createTuple(spark, db, "t",
@@ -334,8 +334,8 @@ class DistEngineSpec extends SparkTestBase {
     assert(conflicts.schemaConflicts.isEmpty)
     val rel = merged.relations("big")
     rel.ext match {
-      case Extension.Dist(_, Some(w)) => assert(w.columns.last == Engine.RhCol)
-      case other => fail(s"expected a twin-bearing Dist extension, got: $other")
+      case Extension.Dist(w) => assert(w.columns.last == Engine.RhCol)
+      case other => fail(s"expected a Dist extension, got: $other")
     }
     twinExact(rel)
     assert(rel.cardinality == n - 200 + 6000)
@@ -345,11 +345,12 @@ class DistEngineSpec extends SparkTestBase {
     assert(rel.root == Hashing.contentRootOf(rel.df, rel.rowHash))
   }
 
-  test("a rejected InsertFrom into a twin-less Dist relation releases the twin it rebuilt") {
-    // the restored shape: a Dist extension with no digest twin
+  test("a rejected InsertFrom into a restored Dist relation adds no persisted RDD") {
+    // the restored shape, built the way Persist builds it: lazy digests
     val db0 = freshBig
     val rel = db0.relations("big")
-    val db = Engine.updateState(db0, db0.relations.updated("big", rel.copy(ext = Extension.Dist(rel.df))))
+    val db = Engine.updateState(db0, db0.relations.updated("big",
+      rel.copy(ext = Extension.Dist(rel.df.withColumn(Engine.RhCol, rel.rowHash)))))
     val sc = spark.sparkContext
     for ((label, rows) <- Seq("small" -> 5L, "large" -> (Engine.LocalThreshold + 1L))) {
       // compared as id sets: the context cleaner may unpersist RDDs that
@@ -380,11 +381,78 @@ class DistEngineSpec extends SparkTestBase {
     assert(conflicts.schemaConflicts.isEmpty)
     val rel = merged.relations("t")
     rel.ext match {
-      case Extension.Dist(_, Some(w)) => assert(w.columns.last == Engine.RhCol)
-      case other => fail(s"expected a twin-bearing Dist extension, got: $other")
+      case Extension.Dist(w) => assert(w.columns.last == Engine.RhCol)
+      case other => fail(s"expected a Dist extension, got: $other")
     }
     twinExact(rel)
     assert(rel.cardinality == 2L * half)
     assert(rel.root == Hashing.contentRootOf(rel.df, rel.rowHash))
+  }
+
+  /** `(k, f = 0.0)` for every k below [[n]], in the three Dist shapes a
+    * relation takes: built by a bulk insert (materialized digests),
+    * reopened over its persisted object, and restored over an in-memory
+    * frame (both with lazy digests). */
+  private def zeroShapes: Seq[(String, Database)] = {
+    val rows = spark.range(n).select(col("id").as("k"), lit(0.0).as("f"))
+    val db0 = Engine.createRelation(spark, Engine.createDatabase(spark, "zero"),
+      "z", RelSchema(List("k" -> "integer", "f" -> "rational"))).fold(e => fail(e.message), identity)
+    val built = Engine.insertFrom(spark, db0, "z", rows).fold(e => fail(e.message), identity)
+    val dir = java.nio.file.Files.createTempDirectory("graft-zero").toString
+    Persist.saveSnapshot(spark, dir, built)
+    val rel = built.relations("z")
+    val inMemory = rel.copy(ext = Extension.Dist(rows.withColumn(Engine.RhCol, rel.rowHash)), chain = 0)
+    Seq("built" -> built, "reopened" -> Persist.reopen(spark, dir, built),
+      "in-memory" -> Engine.updateState(built, built.relations.updated("z", inMemory)))
+  }
+
+  private def zeroTuple(f: Double): Seq[(String, Value)] = Seq("k" -> Value.IntV(1), "f" -> Value.FloatV(f))
+
+  test("-0.0 and 0.0 are distinct tuples in every Dist shape: insert, duplicate probe, delete") {
+    val negBits = java.lang.Double.doubleToRawLongBits(-0.0)
+    for ((shape, db) <- zeroShapes) {
+      assert(db.relations("z").localRows.isEmpty, s"$shape: expected a Dist relation")
+      val both = Engine.createTuple(spark, db, "z", zeroTuple(-0.0))
+        .fold(e => fail(s"$shape: inserting (1, -0.0) next to (1, 0.0): ${e.message}"), identity)
+      assert(Engine.createTuple(spark, both, "z", zeroTuple(-0.0))
+        .left.exists(_.message.startsWith("DuplicateTuple")), s"$shape: a repeated (1, -0.0) must clash")
+      val rel = Engine.retractTuple(spark, both, "z", zeroTuple(0.0))
+        .fold(e => fail(s"$shape: ${e.message}"), identity).relations("z")
+      val ones = rel.df.where(col("k") === 1).collect()
+      assert(ones.length == 1, s"$shape: deleting (1, 0.0) must leave exactly (1, -0.0)")
+      assert(java.lang.Double.doubleToRawLongBits(ones.head.getDouble(1)) == negBits, s"$shape: ${ones.head}")
+      assert(rel.cardinality == n)
+      assert(rel.root == Hashing.contentRootOf(rel.df, rel.rowHash), s"$shape: root is not exact")
+    }
+  }
+
+  test("single-tuple ops on a reopened relation hash only inside the prefiltered Filter") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal, Sha2}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+    def sha2Only(what: String, plan: LogicalPlan): Unit = plan.foreach { node =>
+      if (node.expressions.exists(_.exists(_.isInstanceOf[Sha2]))) node match {
+        case Filter(cond, _) => assert(cond.exists {
+          case EqualTo(a: AttributeReference, _: Literal) => a.name == "k"
+          case _ => false
+        }, s"$what: a Filter hashes without the k prefilter:\n$plan")
+        case other => fail(s"$what: ${other.nodeName} computes Sha2:\n$plan")
+      }
+    }
+    val db0 = Engine.createRelation(spark, Engine.createDatabase(spark, "pin"),
+      "z", RelSchema(List("k" -> "integer", "f" -> "rational"))).fold(e => fail(e.message), identity)
+    val built = Engine.insertFrom(spark, db0, "z",
+      spark.range(1000).select(col("id").as("k"), lit(0.0).as("f"))).fold(e => fail(e.message), identity)
+    val dist = Engine.updateState(built, built.relations.updated("z",
+      built.relations("z").copy(ext = Extension.Dist(built.relations("z").wideDf))))
+    val dir = java.nio.file.Files.createTempDirectory("graft-pin").toString
+    Persist.saveSnapshot(spark, dir, dist)
+    val reopened = Persist.reopen(spark, dir, dist)
+    val both = Engine.createTuple(spark, reopened, "z", zeroTuple(-0.0)).fold(e => fail(e.message), identity)
+    val rel = Engine.retractTuple(spark, both, "z", zeroTuple(0.0))
+      .fold(e => fail(e.message), identity).relations("z")
+    sha2Only("rel.df after InsertTuple + DeleteTuple", rel.df.queryExecution.optimizedPlan)
+    val probe = Engine.tupleProbe(rel, rel.wideDf, zeroTuple(-0.0), Hashing.tupleHash("z", zeroTuple(-0.0)))
+    sha2Only("the duplicate probe", probe.queryExecution.optimizedPlan)
+    assert(probe.count() == 1)
   }
 }

@@ -102,8 +102,9 @@ class PersistSpec extends SparkTestBase {
     val df = spark.range(n.toLong).select(col("id").as("x"))
     val schema = graft.types.RelSchema(List("x" -> "integer"))
     val struct = schema.toStruct(graft.types.Domain.prelude).toOption.get
-    val rel0 = StoredRelation("big", schema, struct, Extension.Dist(df),
-      graft.hashing.Hashing.contentRootOf(df, graft.hashing.Hashing.rowHashCol("big", struct)))
+    val rh = graft.hashing.Hashing.rowHashCol("big", struct)
+    val rel0 = StoredRelation("big", schema, struct, Extension.Dist(df.withColumn(Engine.RhCol, rh)),
+      graft.hashing.Hashing.contentRootOf(df, rh))
     var db = Database("g", scala.collection.immutable.ListMap("big" -> rel0),
       graft.types.Domain.prelude, Nil, Nil, "")
     db = db.copy(hash = graft.hashing.Hashing.databaseHash(db.name, Seq(rel0.relHash)))

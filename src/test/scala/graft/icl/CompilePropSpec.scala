@@ -43,7 +43,7 @@ class CompilePropSpec extends SparkTestBase {
 
   private lazy val distDb: Database = {
     val rels = localDb.relations.map { case (n, r) =>
-      n -> (if (r.root.count == 0) r else r.copy(ext = Extension.Dist(r.df)))
+      n -> (if (r.root.count == 0) r else r.copy(ext = Extension.Dist(r.df.withColumn(Engine.RhCol, r.rowHash))))
     }
     localDb.copy(relations = rels)
   }

@@ -45,7 +45,7 @@ class CompileSpec extends SparkTestBase {
   /** The same database with every relation forced to a Dist extension. */
   private lazy val distDb: Database = {
     val rels = localDb.relations.map { case (n, r) =>
-      n -> (if (r.root.count == 0) r else r.copy(ext = Extension.Dist(r.df)))
+      n -> (if (r.root.count == 0) r else r.copy(ext = Extension.Dist(r.df.withColumn(Engine.RhCol, r.rowHash))))
     }
     localDb.copy(relations = rels)
   }
