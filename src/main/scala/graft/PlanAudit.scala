@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.AnalyticsQueries
+import graft.pipeline.PipelineQueries
 
 /** One-off physical-plan audit helper for PLANS.md: prints exchange /
   * join-strategy counts for the pipeline operators added in round 4. */
@@ -35,7 +37,7 @@ object PlanAudit {
       return
     }
     audit("asof_click_purchase", {
-      val ev = events.withColumn("ts", expr("unix_micros(cast(ts as timestamp))"))
+      val ev = events.withColumn("ts", expr(QueryHarness.TsUsSql))
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -44,17 +46,17 @@ object PlanAudit {
         Seq("event_id", "value"), "event_id")
     })
     audit("range_join_events", {
-      val ev = events.withColumn("ts", expr("unix_micros(cast(ts as timestamp))"))
+      val ev = events.withColumn("ts", expr(QueryHarness.TsUsSql))
       val signups = ev.filter(col("event_type") === "signup")
         .select(col("event_id").as("signup_event"), col("user_id"), col("ts"))
       val acts = ev.filter(col("event_type") =!= "signup")
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       graft.operators.RangeJoin.band(signups, acts, Seq("user_id"), "ts",
-        1L, SparkEntry.RangeJoinDayUs, Seq("event_id", "event_type"))
+        1L, QueryHarness.RangeJoinDayUs, Seq("event_id", "event_type"))
     })
     audit("agg_sessionize", graft.operators.Sessionize.byGap(
-      events.withColumn("ts", expr("unix_micros(cast(ts as timestamp))")), "user_id", "ts",
-      SparkEntry.SessionGapUs, "value"))
+      events.withColumn("ts", expr(QueryHarness.TsUsSql)), "user_id", "ts",
+      AnalyticsQueries.SessionGapUs, "value"))
     audit("join_salted_agg", {
       val li = spark.read.parquet(s"$dir/lineitem.parquet")
         .select(col("l_orderkey").as("okey"), col("l_quantity"))
@@ -64,7 +66,7 @@ object PlanAudit {
     })
     audit("pack_sequences", graft.pipeline.Packing.pack(docs, "doc_id", "text"))
     audit("sample_stratified", graft.pipeline.Sampling.stratified(
-      docs, "doc_id", "lang", SparkEntry.SampleRates.toMap))
+      docs, "doc_id", "lang", PipelineQueries.SampleRates.toMap))
     audit("sample_source_cap", graft.pipeline.Sampling.capPerStratum(
       docs, "doc_id", "source", "n_chars", 10))
     audit("text_vocab", graft.pipeline.TextPipeline.vocab(docs, "doc_id", "text"))
@@ -85,9 +87,9 @@ object PlanAudit {
       spark.read.parquet(s"$dir/embeddings.parquet")))
     audit("ann_pq_topk", graft.pipeline.Ann.pqTopK(
       spark.read.parquet(s"$dir/embeddings.parquet")))
-    audit("rag_retrieve", SparkEntry.ragRetrieve(
+    audit("rag_retrieve", PipelineQueries.ragRetrieve(
       spark.read.parquet(s"$dir/embeddings.parquet"), docs))
-    audit("dedup_incremental", SparkEntry.incrementalNewDocs(docs))
+    audit("dedup_incremental", PipelineQueries.incrementalNewDocs(docs))
     audit("dedup_excise_spans", graft.pipeline.Dedup.exciseDupSpans(docs, "doc_id", "text"))
     audit("agg_supplier_variety", SparkEntry.queries("agg_supplier_variety")(spark, dir))
     audit("agg_nation_traffic", SparkEntry.queries("agg_nation_traffic")(spark, dir))
@@ -194,8 +196,8 @@ object PlanAudit {
     audit("ann_filtered_topk", graft.pipeline.Ann.filteredCosineTopK(
       embs, col("label") === graft.pipeline.Ann.FilterLabel))
     audit("sample_mix_budget", graft.pipeline.Sampling.mixTokenBudget(
-      docs, "doc_id", "source", "text", SparkEntry.MixWeights,
-      SparkEntry.MixDefaultWeight, SparkEntry.MixBudget))
+      docs, "doc_id", "source", "text", PipelineQueries.MixWeights,
+      PipelineQueries.MixDefaultWeight, PipelineQueries.MixBudget))
     audit("text_cooccurrence",
       graft.pipeline.TextPipeline.cooccurrence(docs, "doc_id", "text"))
     // round-9 session-2 additions, via the registered query fns

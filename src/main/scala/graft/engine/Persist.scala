@@ -366,18 +366,44 @@ object Persist {
     * [[saveStore]] (O(history) filesystem round-trips per mutation on a
     * remote store). */
   def writeStoreFile(spark: SparkSession, root: String, store: Store,
-      current: Option[Database]): Unit = {
-    val f = fs(spark, root)
-    val sexp = SList(List(
+      current: Option[Database]): Unit =
+    writeText(fs(spark, root), storePath(root), StoreFile(
+      current.map(_.hash).getOrElse("none"), store.head.getOrElse("none"), store.list.toList,
+      (store.allSnapshots.map(_.hash) ++ current.map(_.hash)).distinct.toList).render)
+
+  /** The store file: the current database hash and HEAD (each `none`
+    * when absent), the branch registry, and every persisted snapshot. */
+  private final case class StoreFile(current: String, head: String,
+      branches: List[(String, String)], snapshots: List[String]) {
+    def render: String = SList(List(
       Atom("store"),
-      Sexp.list(Atom("current"), Atom(current.map(_.hash).getOrElse("none"))),
-      Sexp.list(Atom("head"), Atom(store.head.getOrElse("none"))),
+      Sexp.list(Atom("current"), Atom(current)),
+      Sexp.list(Atom("head"), Atom(head)),
       Sexp.list(Atom("branches"),
-        SList(store.list.toList.map { case (n, t) => Sexp.list(Atom(n), Atom(t)) })),
-      Sexp.list(Atom("snapshots"),
-        SList((store.allSnapshots.map(_.hash) ++ current.map(_.hash)).distinct.toList.map(Atom(_))))))
-    writeText(f, storePath(root), sexp.render)
+        SList(branches.map { case (n, t) => Sexp.list(Atom(n), Atom(t)) })),
+      Sexp.list(Atom("snapshots"), SList(snapshots.map(Atom(_)))))).render
   }
+
+  private def readStoreFile(f: FileSystem, root: String): Either[String, StoreFile] =
+    Sexp.parse(readText(f, storePath(root))).flatMap {
+      case SList(Atom("store") :: fields) =>
+        for {
+          current <- field(fields, "current").flatMap(atomOf(_, "current"))
+          head <- field(fields, "head").flatMap(atomOf(_, "head"))
+          branches <- field(fields, "branches").flatMap {
+            case SList(bs) => traverse(bs) {
+              case SList(List(Atom(n), Atom(t))) => Right(n -> t)
+              case o => Left(s"bad branch entry: ${o.render}")
+            }
+            case o => Left(s"bad branches: ${o.render}")
+          }
+          hashes <- field(fields, "snapshots").flatMap {
+            case SList(hs) => traverse(hs)(atomOf(_, "snapshot hash"))
+            case o => Left(s"bad snapshots: ${o.render}")
+          }
+        } yield StoreFile(current, head, branches, hashes)
+      case other => Left(s"bad store file: ${other.render}")
+    }
 
   // ---- manifest parsing (shared by load, gc, fsck) ----
 
@@ -576,38 +602,21 @@ object Persist {
   def restoreStore(spark: SparkSession, root: String,
       store: Store): Either[String, Option[Database]] = {
     val f = fs(spark, root)
-    val p = storePath(root)
-    if (!f.exists(p)) Right(None)
-    else Sexp.parse(readText(f, p)).flatMap {
-      case SList(Atom("store") :: fields) =>
-        for {
-          current <- field(fields, "current").flatMap(atomOf(_, "current"))
-          head <- field(fields, "head").flatMap(atomOf(_, "head"))
-          branches <- field(fields, "branches").flatMap {
-            case SList(bs) => traverse(bs) {
-              case SList(List(Atom(n), Atom(t))) => Right(n -> t)
-              case o => Left(s"bad branch entry: ${o.render}")
-            }
-            case o => Left(s"bad branches: ${o.render}")
-          }
-          hashes <- field(fields, "snapshots").flatMap {
-            case SList(hs) => traverse(hs)(atomOf(_, "snapshot hash"))
-            case o => Left(s"bad snapshots: ${o.render}")
-          }
-          cache = mutable.Map.empty[String, Extension]
-          snapshots <- traverse(hashes.filter(h => f.exists(snapshotPath(root, h))))(
-            loadSnapshotCached(spark, root, _, cache))
-          cur <-
-            if (current == "none") Right(None)
-            else snapshots.find(_.hash == current)
-              .toRight(s"current snapshot $current not among persisted snapshots").map(Some(_))
-        } yield {
-          snapshots.foreach(store.save)
-          branches.foreach { case (n, t) => store.createBranch(n, t) }
-          if (head != "none") store.checkout(head)
-          cur
-        }
-      case other => Left(s"bad store file: ${other.render}")
+    if (!f.exists(storePath(root))) Right(None)
+    else for {
+      sf <- readStoreFile(f, root)
+      cache = mutable.Map.empty[String, Extension]
+      snapshots <- traverse(sf.snapshots.filter(h => f.exists(snapshotPath(root, h))))(
+        loadSnapshotCached(spark, root, _, cache))
+      cur <-
+        if (sf.current == "none") Right(None)
+        else snapshots.find(_.hash == sf.current)
+          .toRight(s"current snapshot ${sf.current} not among persisted snapshots").map(Some(_))
+    } yield {
+      snapshots.foreach(store.save)
+      sf.branches.foreach { case (n, t) => store.createBranch(n, t) }
+      if (sf.head != "none") store.checkout(sf.head)
+      cur
     }
   }
 
@@ -664,45 +673,17 @@ object Persist {
       retainExtra: Set[String] = Set.empty,
       graceMs: Long = DefaultGcGraceMs): Either[String, Seq[String]] = {
     val f = fs(spark, root)
-    val p = storePath(root)
-    if (!f.exists(p)) Right(Seq.empty)
-    else Sexp.parse(readText(f, p)).flatMap {
-      case SList(Atom("store") :: fields) =>
-        for {
-          current <- field(fields, "current").flatMap(atomOf(_, "current"))
-          branches <- field(fields, "branches").flatMap {
-            case SList(bs) => traverse(bs) {
-              case SList(List(Atom(n), Atom(t))) => Right(n -> t)
-              case o => Left(s"bad branch entry: ${o.render}")
-            }
-            case o => Left(s"bad branches: ${o.render}")
-          }
-          hashes <- field(fields, "snapshots").flatMap {
-            case SList(hs) => traverse(hs)(atomOf(_, "snapshot hash"))
-            case o => Left(s"bad snapshots: ${o.render}")
-          }
-          retain = (retainExtra ++ branches.map(_._2) ++
-            (if (current == "none") Set.empty else Set(current))).intersect(hashes.toSet)
-          kept = hashes.filter(retain.contains)
-          head <- field(fields, "head").flatMap(atomOf(_, "head"))
-          deleted <- {
-            // rewrite the store FIRST (atomic), then delete manifests:
-            // a crash in between leaves unreferenced manifests, which a
-            // later gc/prune collects — never a dangling reference
-            val sexp = SList(List(
-              Atom("store"),
-              Sexp.list(Atom("current"), Atom(current)),
-              Sexp.list(Atom("head"), Atom(head)),
-              Sexp.list(Atom("branches"),
-                SList(branches.map { case (n, t) => Sexp.list(Atom(n), Atom(t)) })),
-              Sexp.list(Atom("snapshots"), SList(kept.map(Atom(_))))))
-            writeText(f, p, sexp.render)
-            hashes.filterNot(retain.contains)
-              .foreach(h => f.delete(snapshotPath(root, h), false))
-            gc(spark, root, graceMs)
-          }
-        } yield deleted
-      case other => Left(s"bad store file: ${other.render}")
+    if (!f.exists(storePath(root))) Right(Seq.empty)
+    else readStoreFile(f, root).flatMap { sf =>
+      val retain = (retainExtra ++ sf.branches.map(_._2) ++
+        (if (sf.current == "none") Set.empty else Set(sf.current))).intersect(sf.snapshots.toSet)
+      // rewrite the store FIRST (atomic), then delete manifests: a crash
+      // in between leaves unreferenced manifests, which a later gc/prune
+      // collects — never a dangling reference
+      writeText(f, storePath(root), sf.copy(snapshots = sf.snapshots.filter(retain.contains)).render)
+      sf.snapshots.filterNot(retain.contains)
+        .foreach(h => f.delete(snapshotPath(root, h), false))
+      gc(spark, root, graceMs)
     }
   }
 

@@ -100,11 +100,6 @@ object Dedup {
       }.toDF(idCol, "shingle")
   }
 
-  /** doc → distinct shingle set (collect_set over [[shingleRows]]). */
-  def shingleSets(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    shingleRows(df, idCol, textCol)
-      .groupBy(col(idCol)).agg(collect_set(col("shingle")).as("sh"))
-
   /** doc → LSH band hashes (b0..b{NumBands-1}), one row per document.
     *
     * Formulated as explode → groupBy with NumHashes min-aggregates — each

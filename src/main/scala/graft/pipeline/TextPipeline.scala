@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
 object TextPipeline {
 
   /** Defaults pinned by the oracle suite, single-sourced between the
-    * Spark operators and the SparkEntry oracle registrations so the two
-    * sides cannot drift. */
+    * Spark operators and the [[PipelineQueries]] oracle registrations so
+    * the two sides cannot drift. */
   val TfidfTopK = 3
   val ChunkWindow = 32
   val ChunkStride = 24

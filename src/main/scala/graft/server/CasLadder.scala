@@ -34,20 +34,10 @@ object CasLadder {
     val listener = new Listener(spark, Some(new ParquetCatalog(spark, dir))).start()
     try {
       val retries = new AtomicLong(0)
-      def ok(conn: WireClient.Conn, stmt: String): Unit = {
-        var resp = conn.request(stmt)
-        var attempts = 1
-        // bound: an attempt only re-fails if ANOTHER commit landed since
-        // its snapshot, and the whole scenario commits totalInserts + 2
-        // times — the structural `(error (conflict` anchor, same as
-        // tcp_concurrent_inserts
-        while (resp.startsWith("(error (conflict") && attempts < totalInserts + 10) {
-          retries.incrementAndGet()
-          resp = conn.request(stmt); attempts += 1
-        }
-        if (!resp.startsWith("(ok"))
-          throw new IllegalArgumentException(s"$stmt -> $resp")
-      }
+      // bound: an attempt only re-fails if ANOTHER commit landed since
+      // its snapshot, and the whole scenario commits totalInserts + 2 times
+      def ok(conn: WireClient.Conn, stmt: String): Unit =
+        retries.addAndGet(WireClient.requestOk(conn, stmt, maxAttempts = totalInserts + 10)): Unit
       val boot = new WireClient.Conn(listener.localPort)
       try {
         ok(boot, "(CreateDatabase g)")

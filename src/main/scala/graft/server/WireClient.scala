@@ -55,6 +55,23 @@ object WireClient {
 
   private def fail(msg: String): Nothing = throw new IllegalStateException(msg)
 
+  /** Send a mutation and require `(ok …)`, re-sending it while the
+    * answer is a lost commit CAS, at most `maxAttempts` sends in all; a
+    * conflicted attempt applied nothing, so the retry is convergent.
+    * Only the structural `(error (conflict` prefix counts as a CAS loss
+    * (it is never sublanguage-wrapped), so an unrelated error whose
+    * payload embeds "(conflict" fails at once. Returns the re-send count. */
+  def requestOk(conn: Conn, stmt: String, maxAttempts: Int): Int = {
+    var resp = conn.request(stmt)
+    var retries = 0
+    while (resp.startsWith("(error (conflict") && retries + 1 < maxAttempts) {
+      resp = conn.request(stmt); retries += 1
+    }
+    if (!resp.startsWith("(ok"))
+      throw new IllegalArgumentException(s"$stmt -> $resp")
+    retries
+  }
+
   private def field(fields: List[Sexp], key: String): Sexp =
     fields.collectFirst { case SList(List(Atom(`key`), v)) => v }
       .getOrElse(fail(s"response missing field: $key"))
