@@ -14,10 +14,11 @@ import org.apache.spark.sql.SparkSession
   * printed one per line).
   *
   * gc and prune are OFFLINE operations: stop any server/session writing
-  * to the root first — prune rewrites the store file from its own read
-  * of it, so a concurrent commit between that read and the rewrite is
-  * LOST (no grace window can protect the store pointer). The object
-  * grace window ([[graft.engine.Persist.DefaultGcGraceMs]], 15 min) is
+  * to the root first — prune commits a new store record from its own
+  * read of the latest one, so a concurrent commit between that read and
+  * prune's record is LOST (no grace window can protect the store
+  * pointer). The object grace window
+  * ([[graft.engine.Persist.DefaultGcGraceMs]], 15 min) is
   * defense-in-depth for the narrower objects-before-manifest race, not
   * a license to collect online. Pass an explicit grace in ms as the
   * third argument (`0` = collect everything immediately on a quiesced

@@ -44,8 +44,16 @@ import graft.types.{Cardinality, Domain, RelSchema}
   * snapshots/<dbHash>.sexp     database manifests: name, history, domains,
   *                             constraints, deferred queue, and per-
   *                             relation (schema, content root, object ref)
-  * store.sexp                  branch registry + HEAD + current hash
+  * store/<generation>.sexp     the store record: branch registry + HEAD +
+  *                             current hash. Each commit writes the next
+  *                             generation, then deletes the older ones;
+  *                             boot reads the highest (a store from before
+  *                             this layout has one `store.sexp` instead)
   * }}}
+  *
+  * Nothing is overwritten: a manifest or store record lands by a plain
+  * rename onto a name that does not exist yet ([[writeText]]), the one
+  * rename that is atomic on every Hadoop file system, local and HDFS alike.
   *
   * Scale posture: a snapshot write costs one parquet write PER CHANGED
   * RELATION (unchanged relations re-reference their existing object) plus
@@ -76,32 +84,47 @@ object Persist {
 
   private def objectPath(root: String, relHash: String) = new Path(root, s"objects/$relHash.parquet")
   private def snapshotPath(root: String, dbHash: String) = new Path(root, s"snapshots/$dbHash.sexp")
-  private def storePath(root: String) = new Path(root, "store.sexp")
+  private def recordPath(root: String, gen: Long) = new Path(root, s"store/$gen.sexp")
+  private def legacyStorePath(root: String) = new Path(root, "store.sexp")
 
   private val SnapshotFile = "^([0-9a-f]{64})\\.sexp$".r
+  private val RecordFile = "^([0-9]{1,18})\\.sexp$".r
+
+  /** Names of the entries of `root/sub`; empty when it does not exist. */
+  private def namesIn(f: FileSystem, root: String, sub: String): Seq[String] = {
+    val dir = new Path(root, sub)
+    if (!f.exists(dir)) Seq.empty else f.listStatus(dir).toSeq.map(_.getPath.getName)
+  }
+
+  /** Generations of the complete store records on disk, ascending
+    * (temp files never match a record name). */
+  private def recordGenerations(f: FileSystem, root: String): Seq[Long] =
+    namesIn(f, root, "store").collect { case RecordFile(g) => g.toLong }.sorted
+
+  /** The boot pointer: the highest-generation store record, else a legacy
+    * `store.sexp`; None when `root` holds no store. */
+  private def latestRecord(f: FileSystem, root: String): Option[Path] =
+    recordGenerations(f, root).lastOption.map(recordPath(root, _))
+      .orElse(Some(legacyStorePath(root)).filter(f.exists))
 
   /** Hashes of the snapshot manifests present on disk (ignores temp
     * files and anything else that is not a complete manifest name). */
-  private def listSnapshotHashes(f: FileSystem, root: String): Seq[String] = {
-    val dir = new Path(root, "snapshots")
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName).collect {
-      case SnapshotFile(h) => h
-    }
-  }
+  private def listSnapshotHashes(f: FileSystem, root: String): Seq[String] =
+    namesIn(f, root, "snapshots").collect { case SnapshotFile(h) => h }
 
-  /** Atomic text write: create a sibling temp file, then rename over the
-    * target with OVERWRITE (atomic on local/HDFS semantics — the reader
-    * always sees either the old or the new complete file). The store
-    * file is rewritten on EVERY transition — a torn in-place write would
-    * brick the whole store at the next boot; manifests get the same
-    * treatment for free. */
-  private def writeText(f: FileSystem, p: Path, text: String): Unit = {
+  /** Publish `text` at `p` without overwriting: write a sibling temp
+    * file, then a plain rename onto `p`, atomic on the local FS and HDFS,
+    * so a reader sees the whole file or none. When `p` already exists the
+    * temp file is dropped and the result is false: a content-addressed
+    * manifest there holds these very bytes, while a store record's next
+    * generation there means a second writer ([[writeRecord]] fails). */
+  private def writeText(f: FileSystem, p: Path, text: String): Boolean = {
     val tmp = new Path(p.getParent, s".${p.getName}.tmp")
     val out = f.create(tmp, true)
     try out.write(text.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, f.getConf)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    if (f.rename(tmp, p)) true
+    else if (f.exists(p)) { f.delete(tmp, false); false }
+    else throw new java.io.IOException(s"rename $tmp -> $p failed")
   }
 
   private def readText(f: FileSystem, p: Path): String = {
@@ -359,7 +382,7 @@ object Persist {
     writeStoreFile(spark, root, store, current)
   }
 
-  /** Write just the store file (branches, HEAD, snapshot references) —
+  /** Commit just the store record (branches, HEAD, snapshot references) —
     * the caller asserts every referenced snapshot is already on disk.
     * Split out so a write-through session that tracks persisted hashes
     * in memory can skip the per-snapshot exists() probes of
@@ -367,11 +390,23 @@ object Persist {
     * remote store). */
   def writeStoreFile(spark: SparkSession, root: String, store: Store,
       current: Option[Database]): Unit =
-    writeText(fs(spark, root), storePath(root), StoreFile(
+    writeRecord(fs(spark, root), root, StoreFile(
       current.map(_.hash).getOrElse("none"), store.head.getOrElse("none"), store.list.toList,
-      (store.allSnapshots.map(_.hash) ++ current.map(_.hash)).distinct.toList).render)
+      (store.allSnapshots.map(_.hash) ++ current.map(_.hash)).distinct.toList))
 
-  /** The store file: the current database hash and HEAD (each `none`
+  /** Commit `sf` as the next store record, then delete the older records
+    * and any legacy `store.sexp`. A crash before the deletions leaves
+    * older records that boot ignores and the next commit deletes. */
+  private def writeRecord(f: FileSystem, root: String, sf: StoreFile): Unit = {
+    val older = recordGenerations(f, root)
+    val p = recordPath(root, older.lastOption.fold(1L)(_ + 1))
+    if (!writeText(f, p, sf.render))
+      throw new java.io.IOException(s"store record $p already exists: a second writer?")
+    older.foreach(g => f.delete(recordPath(root, g), false))
+    f.delete(legacyStorePath(root), false)
+  }
+
+  /** A store record: the current database hash and HEAD (each `none`
     * when absent), the branch registry, and every persisted snapshot. */
   private final case class StoreFile(current: String, head: String,
       branches: List[(String, String)], snapshots: List[String]) {
@@ -384,8 +419,8 @@ object Persist {
       Sexp.list(Atom("snapshots"), SList(snapshots.map(Atom(_)))))).render
   }
 
-  private def readStoreFile(f: FileSystem, root: String): Either[String, StoreFile] =
-    Sexp.parse(readText(f, storePath(root))).flatMap {
+  private def readStoreFile(f: FileSystem, p: Path): Either[String, StoreFile] =
+    Sexp.parse(readText(f, p)).flatMap {
       case SList(Atom("store") :: fields) =>
         for {
           current <- field(fields, "current").flatMap(atomOf(_, "current"))
@@ -590,7 +625,7 @@ object Persist {
 
   /** True when `root` holds a persisted store. */
   def exists(spark: SparkSession, root: String): Boolean =
-    fs(spark, root).exists(storePath(root))
+    latestRecord(fs(spark, root), root).nonEmpty
 
   /** Restore a persisted session into `store`: snapshots, branches,
     * HEAD; returns the current database (None for a pre-CreateDatabase
@@ -602,21 +637,22 @@ object Persist {
   def restoreStore(spark: SparkSession, root: String,
       store: Store): Either[String, Option[Database]] = {
     val f = fs(spark, root)
-    if (!f.exists(storePath(root))) Right(None)
-    else for {
-      sf <- readStoreFile(f, root)
-      cache = mutable.Map.empty[String, Extension]
-      snapshots <- traverse(sf.snapshots.filter(h => f.exists(snapshotPath(root, h))))(
-        loadSnapshotCached(spark, root, _, cache))
-      cur <-
-        if (sf.current == "none") Right(None)
-        else snapshots.find(_.hash == sf.current)
-          .toRight(s"current snapshot ${sf.current} not among persisted snapshots").map(Some(_))
-    } yield {
-      snapshots.foreach(store.save)
-      sf.branches.foreach { case (n, t) => store.createBranch(n, t) }
-      if (sf.head != "none") store.checkout(sf.head)
-      cur
+    latestRecord(f, root).fold(Right(None): Either[String, Option[Database]]) { p =>
+      for {
+        sf <- readStoreFile(f, p)
+        cache = mutable.Map.empty[String, Extension]
+        snapshots <- traverse(sf.snapshots.filter(h => f.exists(snapshotPath(root, h))))(
+          loadSnapshotCached(spark, root, _, cache))
+        cur <-
+          if (sf.current == "none") Right(None)
+          else snapshots.find(_.hash == sf.current)
+            .toRight(s"current snapshot ${sf.current} not among persisted snapshots").map(Some(_))
+      } yield {
+        snapshots.foreach(store.save)
+        sf.branches.foreach { case (n, t) => store.createBranch(n, t) }
+        if (sf.head != "none") store.checkout(sf.head)
+        cur
+      }
     }
   }
 
@@ -662,28 +698,29 @@ object Persist {
       }
     }
 
-  /** Retire history: rewrite the store file to reference only the
+  /** Retire history: commit a store record that references only the
     * current snapshot, the branch tips, and `retainExtra`; delete the
     * other snapshot manifests; then [[gc]] the orphaned objects. The
     * ONE correct way to shrink a store — deleting manifests by hand
-    * leaves the store file pointing at ghosts. Returns the deleted
+    * leaves the store record pointing at ghosts. Returns the deleted
     * object names. Note the trade: merges whose LCA was pruned stop
     * working (the reference's append-only store has no pruning at all). */
   def prune(spark: SparkSession, root: String,
       retainExtra: Set[String] = Set.empty,
       graceMs: Long = DefaultGcGraceMs): Either[String, Seq[String]] = {
     val f = fs(spark, root)
-    if (!f.exists(storePath(root))) Right(Seq.empty)
-    else readStoreFile(f, root).flatMap { sf =>
-      val retain = (retainExtra ++ sf.branches.map(_._2) ++
-        (if (sf.current == "none") Set.empty else Set(sf.current))).intersect(sf.snapshots.toSet)
-      // rewrite the store FIRST (atomic), then delete manifests: a crash
-      // in between leaves unreferenced manifests, which a later gc/prune
-      // collects — never a dangling reference
-      writeText(f, storePath(root), sf.copy(snapshots = sf.snapshots.filter(retain.contains)).render)
-      sf.snapshots.filterNot(retain.contains)
-        .foreach(h => f.delete(snapshotPath(root, h), false))
-      gc(spark, root, graceMs)
+    latestRecord(f, root).fold(Right(Seq.empty): Either[String, Seq[String]]) { p =>
+      readStoreFile(f, p).flatMap { sf =>
+        val retain = (retainExtra ++ sf.branches.map(_._2) ++
+          (if (sf.current == "none") Set.empty else Set(sf.current))).intersect(sf.snapshots.toSet)
+        // commit the new record FIRST (atomic), then delete manifests: a
+        // crash in between leaves unreferenced manifests, which a later
+        // gc/prune collects — never a dangling reference
+        writeRecord(f, root, sf.copy(snapshots = sf.snapshots.filter(retain.contains)))
+        sf.snapshots.filterNot(retain.contains)
+          .foreach(h => f.delete(snapshotPath(root, h), false))
+        gc(spark, root, graceMs)
+      }
     }
   }
 
@@ -716,7 +753,8 @@ object Persist {
       graceMs <= 0 || (st.getModificationTime > 0 && st.getModificationTime < cutoff)
     // leftover temp files from interrupted atomic writes are never live —
     // but a YOUNG .tmp may be an atomic write in progress
-    for (dir <- Seq(new Path(root, "snapshots"), new Path(root)) if f.exists(dir);
+    for (dir <- Seq(new Path(root, "snapshots"), new Path(root, "store"), new Path(root))
+         if f.exists(dir);
          st <- f.listStatus(dir)
          if st.isFile && st.getPath.getName.endsWith(".tmp") && agedOut(st))
       f.delete(st.getPath, false)

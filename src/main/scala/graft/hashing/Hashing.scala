@@ -1,6 +1,7 @@
 package graft.hashing
 
 import java.security.MessageDigest
+import java.util.HexFormat
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,10 +30,8 @@ import graft.types.{RelSchema, Value}
   */
 object Hashing {
 
-  def sha256Hex(s: String): String = {
-    val d = MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
-    d.map(b => f"$b%02x").mkString
-  }
+  def sha256Hex(s: String): String =
+    HexFormat.of().formatHex(MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8")))
 
   private def tagOf(dt: DataType): String = dt match {
     case LongType | IntegerType | ShortType | ByteType => "i"

@@ -1,6 +1,7 @@
 package graft.engine
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.SparkTestBase
 import graft.server.{EngineSession, QueryResult, Transition}
 
@@ -264,8 +265,8 @@ class PersistSpec extends SparkTestBase {
     assert(new java.io.File(dir, "objects").list().length === objectsBefore - deleted.length)
     assert(Persist.fsck(spark, dir) === Right(Seq.empty))
 
-    // the pruned store BOOTS: store.sexp was rewritten in lockstep with
-    // the manifest deletions, current state and branches intact
+    // the pruned store BOOTS: prune committed a new store record before it
+    // deleted the manifests, so current state and branches are intact
     val s2 = new EngineSession(spark, persistDir = Some(dir))
     assert(s2.db.hash === s1.db.hash)
     assert(s2.store.head === Some("main"))
@@ -329,6 +330,114 @@ class PersistSpec extends SparkTestBase {
     assert(jobs === 0)
     assert(s2.db.hash === s1.db.hash)
     assert(s2.db.relations("t").localRows.get.keySet === s1.db.relations("t").localRows.get.keySet)
+  }
+
+  // ---- the append-only store root ----
+
+  /** Names under `store/`, checksum files excluded. */
+  private def storeNames(dir: String): Set[String] =
+    Option(new java.io.File(dir, "store").list()).fold(Set.empty[String])(_.toSet)
+      .filterNot(_.endsWith(".crc"))
+
+  /** The one store record on disk. */
+  private def onlyRecord(dir: String): java.io.File = {
+    val names = storeNames(dir)
+    assert(names.size === 1 && names.head.matches("[0-9]+\\.sexp"), names.toString)
+    new java.io.File(dir, s"store/${names.head}")
+  }
+
+  private def generation(record: java.io.File): Long = record.getName.stripSuffix(".sexp").toLong
+
+  /** Every regular file under `dir` but checksum files, as relative paths. */
+  private def dataFiles(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(root.relativize(_).toString).filterNot(_.endsWith(".crc")).toSet
+    finally walk.close()
+  }
+
+  /** A store with one Local relation `t`, after `n` single-tuple inserts. */
+  private def storeWith(n: Int): (String, EngineSession) = {
+    val dir = tmpDir()
+    val s = new EngineSession(spark, persistDir = Some(dir))
+    exec(s, "(CreateDatabase g)")
+    exec(s, "(CreateRelation (name t) (schema ((k integer))))")
+    for (k <- 1 to n) exec(s, s"(InsertTuple (relation t) (attributes ((k (Int $k)))))")
+    (dir, s)
+  }
+
+  test("every commit leaves exactly one store record, and a Local InsertTuple adds three files") {
+    val (dir, s1) = storeWith(0)
+    var gen = generation(onlyRecord(dir))
+    for (k <- 1 to 5) {
+      exec(s1, s"(InsertTuple (relation t) (attributes ((k (Int $k)))))")
+      val g = generation(onlyRecord(dir)) // one record, no temp file
+      assert(g > gen)
+      gen = g
+    }
+    assert(!new java.io.File(dir, "store.sexp").exists())
+    val before = dataFiles(dir)
+    exec(s1, "(InsertTuple (relation t) (attributes ((k (Int 6)))))")
+    val after = dataFiles(dir)
+    val obj = s"objects/${s1.db.relations("t").relHash}.parquet"
+    assert(after -- before === Set(s"$obj/part-00000.parquet", s"$obj/_SUCCESS",
+      s"snapshots/${s1.db.hash}.sexp", s"store/${gen + 1}.sexp"))
+    assert(before -- after === Set(s"store/$gen.sexp"))
+    assert(after.size - before.size === 3)
+  }
+
+  test("a leftover temp record is ignored at boot, and the next commit still lands") {
+    val (dir, s1) = storeWith(2)
+    val next = generation(onlyRecord(dir)) + 1
+    Files.write(java.nio.file.Paths.get(dir, "store", s".$next.sexp.tmp"), "(store (curr".getBytes)
+    val s2 = new EngineSession(spark, persistDir = Some(dir))
+    assert(s2.db.hash === s1.db.hash)
+    exec(s2, "(InsertTuple (relation t) (attributes ((k (Int 3)))))")
+    assert(generation(onlyRecord(dir)) === next)
+    assert(new EngineSession(spark, persistDir = Some(dir)).db.hash === s2.db.hash)
+  }
+
+  test("two records on disk (a crash before the older was deleted) boot the newer") {
+    val (dir, s1) = storeWith(1)
+    val older = onlyRecord(dir)
+    val olderBytes = Files.readAllBytes(older.toPath)
+    exec(s1, "(InsertTuple (relation t) (attributes ((k (Int 2)))))")
+    Files.write(older.toPath, olderBytes)
+    assert(storeNames(dir).size === 2)
+    val s2 = new EngineSession(spark, persistDir = Some(dir))
+    assert(s2.db.hash === s1.db.hash)
+    assert(query(s2, "(Base t)") === Seq(Seq(1L), Seq(2L)))
+    // the next commit deletes both
+    exec(s2, "(InsertTuple (relation t) (attributes ((k (Int 3)))))")
+    onlyRecord(dir)
+  }
+
+  test("a legacy store.sexp boots, and its first commit moves the store into store/") {
+    val (dir, s1) = storeWith(1)
+    val legacy = java.nio.file.Paths.get(dir, "store.sexp")
+    Files.move(onlyRecord(dir).toPath, legacy)
+    for (f <- new java.io.File(dir, "store").listFiles()) f.delete()
+    Files.delete(java.nio.file.Paths.get(dir, "store"))
+    val s2 = new EngineSession(spark, persistDir = Some(dir))
+    assert(s2.db.hash === s1.db.hash)
+    exec(s2, "(InsertTuple (relation t) (attributes ((k (Int 2)))))")
+    onlyRecord(dir)
+    assert(!Files.exists(legacy))
+    val s3 = new EngineSession(spark, persistDir = Some(dir))
+    assert(s3.db.hash === s2.db.hash)
+    assert(query(s3, "(Base t)") === Seq(Seq(1L), Seq(2L)))
+  }
+
+  test("gc sweeps an aged temp record under store/ and keeps a young one") {
+    val (dir, _) = storeWith(1)
+    val aged = new java.io.File(dir, "store/.90.sexp.tmp")
+    val young = new java.io.File(dir, "store/.91.sexp.tmp")
+    for (f <- Seq(aged, young)) Files.write(f.toPath, "(store".getBytes)
+    assert(aged.setLastModified(System.currentTimeMillis() - 2 * Persist.DefaultGcGraceMs))
+    assert(Persist.gc(spark, dir) === Right(Seq.empty))
+    assert(!aged.exists())
+    assert(young.exists())
   }
 
   // ---- the driver-side codec ----

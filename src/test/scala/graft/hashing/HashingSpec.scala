@@ -9,6 +9,11 @@ import org.apache.spark.sql.types._
 class HashingSpec extends SparkTestBase {
   import spark.implicits._
 
+  test("sha256Hex is lowercase hex SHA-256 of the UTF-8 bytes (FIPS 180-2 vector)") {
+    assert(Hashing.sha256Hex("abc") ===
+      "ba7816bf8f01cfea414140de5dae2223b00361a396177a9cb410ff61f20015ad")
+  }
+
   test("tupleHash is deterministic and attribute-order-insensitive") {
     val a = Hashing.tupleHash("r", Seq("x" -> Value.IntV(1), "y" -> Value.StrV("a")))
     val b = Hashing.tupleHash("r", Seq("y" -> Value.StrV("a"), "x" -> Value.IntV(1)))
