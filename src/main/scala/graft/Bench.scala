@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and emits one JSON line. A crashing query records
   * an "errors" entry (and −1s) instead of being silently swallowed.
@@ -13,42 +12,15 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // isolation knobs for perf triage on a noisy host: run only the named
     // queries (comma-separated) and/or take best-of-N instead of best-of-2
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).toSet)
-    // fail loudly on knob typos: a misspelled query name would otherwise
-    // emit a plausible empty-but-successful JSON line
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet ++ SparkEntry.scaleProbes.keySet)
-      if (unknown.nonEmpty) {
-        System.err.println(s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
-        sys.exit(2)
-      }
-    }
+    val only = SparkEntry.only(SparkEntry.queries.keySet ++ SparkEntry.scaleProbes.keySet)
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toIntOption.getOrElse {
       System.err.println(s"SPARK_GRAFT_ITERS is not a number: ${sys.env("SPARK_GRAFT_ITERS")}")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      // SPARK_GRAFT_MASTER overrides for multi-JVM smoke runs (the same
-      // knob Verify carries — e.g. local-cluster[2,8,4096])
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // scratch warehouse: bucketed-layout queries must not create
-      // spark-warehouse/ in the repo cwd
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
+    val spark = LocalSession.batch()
+    import SparkEntry.{jsonString => jstr}
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // untimed warmup pass (see scaladoc); failures surface in the timed pass
     // Oracle-checked queries plus scale probes (replicated corpora

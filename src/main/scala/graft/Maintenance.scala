@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Storage-maintenance entry point for a persisted store root:
   *
   * {{{
@@ -31,14 +29,7 @@ object Maintenance {
     val root = args(1)
     val graceMs = if (args.length == 3) args(2).toLong
       else graft.engine.Persist.DefaultGcGraceMs
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(s"graft-maintenance-$cmd")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.server(s"graft-maintenance-$cmd")
     val result: Either[String, Seq[String]] = cmd match {
       case "fsck"  => graft.engine.Persist.fsck(spark, root)
       case "gc"    => graft.engine.Persist.gc(spark, root, graceMs).map(_.map(o => s"deleted $o"))

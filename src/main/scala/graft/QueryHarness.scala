@@ -35,10 +35,6 @@ private[graft] object QueryHarness {
     val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     val base = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), "graft-scratch", key, tag)
-    def wipe(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(wipe)
-      f.delete(): Unit
-    }
     // sweep stale per-process entries: pid-N where /proc/N is gone
     val self = ProcessHandle.current().pid()
     Option(base.toFile.listFiles()).foreach(_.foreach { f =>
@@ -46,12 +42,12 @@ private[graft] object QueryHarness {
         case s if s.startsWith("pid-") =>
           val alive = s.drop(4).toLongOption.exists(p =>
             p == self || ProcessHandle.of(p).isPresent)
-          if (!alive) wipe(f)
-        case _ => wipe(f) // pre-pid layout residue
+          if (!alive) LocalSession.deleteTree(f)
+        case _ => LocalSession.deleteTree(f) // pre-pid layout residue
       }
     })
     val p = base.resolve(s"pid-$self")
-    wipe(p.toFile)
+    LocalSession.deleteTree(p.toFile)
     java.nio.file.Files.createDirectories(p)
     p.toString
   }

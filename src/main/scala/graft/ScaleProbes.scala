@@ -101,13 +101,13 @@ private[graft] object ScaleProbes {
     Option(base.toFile.listFiles()).foreach(_.foreach { f =>
       val alive = f.getName.stripPrefix("pid-").toLongOption
         .exists(p => p == self || ProcessHandle.of(p).isPresent)
-      if (!alive) wipeTree(f)
+      if (!alive) LocalSession.deleteTree(f)
     })
     val in = base.resolve(s"pid-$self").resolve(key).resolve(tag)
     in.toString.intern().synchronized {
       if (!java.nio.file.Files.exists(in)) {
         val tmp = in.resolveSibling(s".$tag.build")
-        if (java.nio.file.Files.exists(tmp)) wipeTree(tmp.toFile)
+        if (java.nio.file.Files.exists(tmp)) LocalSession.deleteTree(tmp.toFile)
         java.nio.file.Files.createDirectories(tmp)
         build(tmp)
         java.nio.file.Files.move(tmp, in,
@@ -325,7 +325,7 @@ private[graft] object ScaleProbes {
     // and rebuilds from scratch otherwise
     val v0ok = Files.exists(root.resolve("verts").resolve("__manifest-v=0")) &&
       Files.exists(root.resolve("forest").resolve("__manifest-v=0"))
-    if (!v0ok) wipeTree(root.toFile)
+    if (!v0ok) LocalSession.deleteTree(root.toFile)
     val verts = new graft.streaming.BucketedState(s, root.resolve("verts"), buckets)
     val forest = new graft.streaming.BucketedState(s, root.resolve("forest"), buckets)
     if (!v0ok) {
@@ -369,15 +369,9 @@ private[graft] object ScaleProbes {
     Option(base.toFile.listFiles()).foreach(_.foreach { f =>
       val alive = f.getName.stripPrefix("pid-").toLongOption
         .exists(p => p == self || ProcessHandle.of(p).isPresent)
-      if (!alive) wipeTree(f)
+      if (!alive) LocalSession.deleteTree(f)
     })
     base.resolve(s"pid-$self").resolve(key).resolve(sub)
-  }
-
-  /** Recursive delete (null-guarded — see [[probeRoot]]). */
-  private def wipeTree(x: java.io.File): Unit = {
-    if (x.isDirectory) Option(x.listFiles()).foreach(_.foreach(wipeTree))
-    x.delete(): Unit
   }
 
   /** The bucketed-streaming-state claim measured: per-batch cost scales
@@ -401,7 +395,7 @@ private[graft] object ScaleProbes {
     // BucketedState's commit point (written after the parquet), so a
     // kill between the two must re-trigger the build, not read empty
     if (!Files.exists(root.resolve("__manifest-v=0"))) {
-      wipeTree(root.toFile)
+      LocalSession.deleteTree(root.toFile)
       val base = s.range(200000L * m)
         .select(col("id").as("k"), (col("id") % 97).as("payload"))
         .withColumn("__bucket", st.bucketOf(0L, col("k")))

@@ -199,16 +199,8 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val workDir = args.lift(1).getOrElse(
-      Files.createTempDirectory("graft-streamdemo").toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      LocalSession.scratchDir("graft-streamdemo").toString)
+    val spark = LocalSession.server("graft-stream-demo")
     val result = run(spark, sfDir, workDir)
     spark.stop()
     result match {

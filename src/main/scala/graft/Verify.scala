@@ -1,31 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER overrides the master for multi-JVM smoke runs
-    // (e.g. local-cluster[2,8,4096] — flushes same-JVM assumptions:
-    // driver-pinned frames, per-executor codec init, broadcast limits)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // scratch warehouse: bucketed-layout queries must not create
-      // spark-warehouse/ in the repo cwd
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // dev-only subset filter (same contract as Bench); unset runs every
+    // query, as the correctness check needs
+    val only = SparkEntry.only(SparkEntry.queries.keySet)
+    val spark = LocalSession.batch()
     new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (same contract as Bench): comma-separated
-    // names; unset = all queries (the driver's mode)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // A query that raises must leave an explicit trace, not a silent
     // omission: errors go to stderr AND verify_errors.json (in outDir and
     // the repo), so a coverage regression can never masquerade as a
@@ -41,18 +25,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import SparkEntry.{jsonString => q}
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.QuerySpec
 import graft.QueryHarness._
@@ -35,22 +34,6 @@ private[graft] object PipelineQueries {
     * be a content identity on real crawls, short enough that the
     * template-generated testdata actually collides on it). */
   val IncrementalPrefixLen: Int = 60
-
-  /** The `rag_retrieve` composition — shared verbatim with PlanAudit
-    * so the audited plan is the shipped plan. */
-  def ragRetrieve(embeddings: DataFrame, docs: DataFrame): DataFrame =
-    graft.pipeline.Ann.cosineTopK(embeddings)
-      .join(docs.select(col("doc_id").as("vec_id"), col("lang"),
-        md5(col("text")).as("text_md5"), col("n_chars")), "vec_id")
-
-  /** The `dedup_incremental` corpus/batch split (every 5th doc arrives
-    * as the new batch) over the prefix content key — shared with
-    * PlanAudit. */
-  def incrementalNewDocs(docs: DataFrame): DataFrame = {
-    val d = docs.withColumn("k", substring(col("text"), 1, IncrementalPrefixLen))
-    graft.pipeline.Dedup.incrementalNew(
-      d.filter(col("doc_id") % 5 =!= 0), d.filter(col("doc_id") % 5 === 0), "doc_id", "k")
-  }
 
   val specs: Seq[QuerySpec] = Seq(
     // curriculum binning: quality-score quartile bins over the corpus —
@@ -913,14 +896,20 @@ private[graft] object PipelineQueries {
     // retrieval pipeline; at scale the payload join is the cheap part
     // (k·queries rows against a bucketed documents table)
     QuerySpec("rag_retrieve", ((s, dir) =>
-      ragRetrieve(table(s, dir, "embeddings"), table(s, dir, "documents"))),
+      graft.pipeline.Ann.cosineTopK(table(s, dir, "embeddings"))
+        .join(table(s, dir, "documents").select(col("doc_id").as("vec_id"), col("lang"),
+          md5(col("text")).as("text_md5"), col("n_chars")), "vec_id")),
       s"""WITH topk AS (${graft.pipeline.Oracles.annCosineTopK})
          |SELECT t.query_id, t.vec_id, t.sim, d.lang, md5(d.text) AS text_md5, d.n_chars
          |FROM topk t JOIN documents d ON d.doc_id = t.vec_id""".stripMargin),
     // incremental-ingest dedup: every 5th doc arrives as the "new batch",
     // keyed on the leading-60-char content prefix (collides on testdata)
-    QuerySpec("dedup_incremental", ((s, dir) =>
-      incrementalNewDocs(table(s, dir, "documents"))),
+    QuerySpec("dedup_incremental", ((s, dir) => {
+      val d = table(s, dir, "documents")
+        .withColumn("k", substring(col("text"), 1, IncrementalPrefixLen))
+      graft.pipeline.Dedup.incrementalNew(
+        d.filter(col("doc_id") % 5 =!= 0), d.filter(col("doc_id") % 5 === 0), "doc_id", "k")
+    }),
       graft.pipeline.Oracles.dedupIncremental(IncrementalPrefixLen)),
     // incremental NEAR-dup admission: new batch (doc_id % 5 = 0) vs the
     // index side's MinHash band table — any band collision flags the doc

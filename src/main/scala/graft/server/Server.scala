@@ -158,14 +158,7 @@ object Server {
       case Some(a) => a
       case None => "(server (storage (memory)) (transport (tcp (port 0))))"
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.server("graft-server")
     boot(spark, configText) match {
       case Left(err) =>
         System.err.println(s"config error: $err")

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.LocalSession
 
 /** Hash-bucketed, VERSIONED parquet state for foreachBatch pipelines —
   * the scale-shaped replacement for the full-rewrite snapshot MERGE:
@@ -323,7 +324,6 @@ final class BucketedState(spark: SparkSession, root: Path, buckets: Int,
     * batch), never per read. */
   def compact(upToBatch: Long): Unit = {
     val keep = latest(upToBatch + 1) // newest manifest ≤ upToBatch
-    def wipe(f: java.io.File): Unit = LatestPointer.wipeTree(f)
     manifestVersions().filter(_ <= upToBatch).dropRight(1)
       .foreach(v => Files.deleteIfExists(manifestPath(v)): Unit)
     for {
@@ -337,10 +337,10 @@ final class BucketedState(spark: SparkSession, root: Path, buckets: Int,
         if bdir.isDirectory && bdir.getName.startsWith("__bucket=")
         k = bdir.getName.drop("__bucket=".length)
         if !keep.get(k).exists(_.version == v)
-      } wipe(bdir)
+      } LocalSession.deleteTree(bdir)
       val left = Option(vdir.listFiles()).getOrElse(Array.empty[java.io.File])
       if (!left.exists(f => f.isDirectory && f.getName.startsWith("__bucket=")))
-        wipe(vdir)
+        LocalSession.deleteTree(vdir)
     }
   }
 }

@@ -140,12 +140,6 @@ private[streaming] object LatestPointer extends PointerStore {
       }
     }
   }
-
-  /** Recursive delete (the janitors' shared helper). */
-  def wipeTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(wipeTree))
-    f.delete(): Unit
-  }
 }
 
 /** Etag-conditional binding of [[PointerStore]] — the object-store

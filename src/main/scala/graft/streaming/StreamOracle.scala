@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.LocalSession
 
 /** The streaming family's ORACLE row: DuckDB cannot observe micro-batches,
   * but it can read what they leave behind — so this drives the
@@ -76,12 +77,11 @@ object StreamOracle {
     val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_") +
       "-" + Integer.toHexString(sfDir.hashCode)
     val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft-stagecache")
-    def wipe(x: java.io.File): Unit = LatestPointer.wipeTree(x)
     val self = ProcessHandle.current().pid()
     Option(base.toFile.listFiles()).foreach(_.foreach { f =>
       val alive = f.getName.stripPrefix("pid-").toLongOption
         .exists(p => p == self || ProcessHandle.of(p).isPresent)
-      if (!alive) wipe(f)
+      if (!alive) LocalSession.deleteTree(f)
     })
     val in = base.resolve(s"pid-$self").resolve(key).resolve(variant)
     // serialize same-JVM builders per target on the interned path (the
@@ -92,7 +92,7 @@ object StreamOracle {
     in.toString.intern().synchronized {
       if (!Files.exists(in)) {
         val tmp = in.resolveSibling(s".$variant.build")
-        if (Files.exists(tmp)) wipe(tmp.toFile)
+        if (Files.exists(tmp)) LocalSession.deleteTree(tmp.toFile)
         Files.createDirectories(tmp)
         build(tmp)
         stampMonotone(tmp)

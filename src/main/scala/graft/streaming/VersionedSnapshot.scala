@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.LocalSession
 
 /** Whole-snapshot VERSIONED parquet state for foreachBatch folds whose
   * entire state is one small mergeable value — a KMV k-minima set, a
@@ -75,6 +76,6 @@ final class VersionedSnapshot(spark: SparkSession, root: Path,
     val below = versions().filter(_ < batch)
     val keep = below.filter(committed).lastOption
     below.filterNot(keep.contains)
-      .foreach(v => LatestPointer.wipeTree(versionPath(v).toFile))
+      .foreach(v => LocalSession.deleteTree(versionPath(v).toFile))
   }
 }

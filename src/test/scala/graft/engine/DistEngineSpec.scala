@@ -398,7 +398,7 @@ class DistEngineSpec extends SparkTestBase {
     val db0 = Engine.createRelation(spark, Engine.createDatabase(spark, "zero"),
       "z", RelSchema(List("k" -> "integer", "f" -> "rational"))).fold(e => fail(e.message), identity)
     val built = Engine.insertFrom(spark, db0, "z", rows).fold(e => fail(e.message), identity)
-    val dir = java.nio.file.Files.createTempDirectory("graft-zero").toString
+    val dir = tempDir("graft-zero").toString
     Persist.saveSnapshot(spark, dir, built)
     val rel = built.relations("z")
     val inMemory = rel.copy(ext = Extension.Dist(rows.withColumn(Engine.RhCol, rel.rowHash)), chain = 0)
@@ -444,7 +444,7 @@ class DistEngineSpec extends SparkTestBase {
       spark.range(1000).select(col("id").as("k"), lit(0.0).as("f"))).fold(e => fail(e.message), identity)
     val dist = Engine.updateState(built, built.relations.updated("z",
       built.relations("z").copy(ext = Extension.Dist(built.relations("z").wideDf))))
-    val dir = java.nio.file.Files.createTempDirectory("graft-pin").toString
+    val dir = tempDir("graft-pin").toString
     Persist.saveSnapshot(spark, dir, dist)
     val reopened = Persist.reopen(spark, dir, dist)
     val both = Engine.createTuple(spark, reopened, "z", zeroTuple(-0.0)).fold(e => fail(e.message), identity)

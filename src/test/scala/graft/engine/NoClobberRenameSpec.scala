@@ -1,7 +1,6 @@
 package graft.engine
 
 import java.net.URI
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
@@ -43,7 +42,7 @@ class NoClobberRenameSpec extends SparkTestBase {
 
   test("a write-through store commits, restarts, prunes and collects without renaming onto a path") {
     spark.sparkContext.hadoopConfiguration.set("fs.noclobber.impl", classOf[NoClobberFileSystem].getName)
-    val local = Files.createTempDirectory("graft-noclobber").toString
+    val local = tempDir("graft-noclobber").toString
     val root = s"noclobber://$local"
     def renames = NoClobberFileSystem.renames.asScala.filter(_.dst.contains(local)).toSeq
 

@@ -8,7 +8,7 @@ import graft.server.{EngineSession, QueryResult, Transition}
 class PersistSpec extends SparkTestBase {
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-persist").toString
+    tempDir("graft-persist").toString
 
   private def exec(s: EngineSession, stmt: String): Unit =
     s.execute(stmt).fold(e => fail(s"$stmt -> $e"), _ => ())

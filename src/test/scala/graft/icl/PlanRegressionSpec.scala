@@ -249,8 +249,7 @@ class PlanRegressionSpec extends SparkTestBase {
     try body
     finally {
       // listener events ride the async bus — drain before reading
-      // (waitUntilEmpty is private[spark]; call through reflection as
-      // PlanAudit does)
+      // (waitUntilEmpty is private[spark]; call it through reflection)
       try {
         val sc = spark.sparkContext
         val bus = sc.getClass.getMethod("listenerBus").invoke(sc)

@@ -45,7 +45,7 @@ class ReliableCheckpointSpec extends SparkTestBase {
     val local = runAll()
     assert(!Checkpoints.reliable, "graft.checkpoint.dir leaked from another test")
 
-    val dir = Files.createTempDirectory("graft-reliable-ckpt")
+    val dir = tempDir("graft-reliable-ckpt")
     sys.props("graft.checkpoint.dir") = dir.toString
     try {
       assert(Checkpoints.reliable)
@@ -68,7 +68,7 @@ class ReliableCheckpointSpec extends SparkTestBase {
     // two distinct parents sharing the leaf name "ckpt": a substring
     // guard on the leaf would treat dirA's context setting as already
     // covering dirB and keep writing to the stale location
-    val base = Files.createTempDirectory("graft-ckpt-guard")
+    val base = tempDir("graft-ckpt-guard")
     val dirA = Files.createDirectories(base.resolve("a/ckpt"))
     val dirB = Files.createDirectories(base.resolve("b/ckpt"))
     def rddDirsUnder(d: java.nio.file.Path): Int = {

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import graft.SparkTestBase
 import graft.streaming.VersionedSnapshot
 import org.apache.spark.sql.functions._
@@ -25,7 +25,7 @@ class AnnPersistSpec extends SparkTestBase {
   private def emb = spark.read.parquet(s"$sf/embeddings.parquet")
 
   test("stored centroid book round-trips bit-identically; restored serve == in-memory serve") {
-    val wd = Files.createTempDirectory("graft-ivf-persist").toString
+    val wd = tempDir("graft-ivf-persist").toString
     val trained = Ann.ivfCentroids(emb)
     val served = Ann.ivfPersistServe(emb, wd)
     // 1. round-trip: the artifact on disk IS the trained book
@@ -43,7 +43,7 @@ class AnnPersistSpec extends SparkTestBase {
   }
 
   test("PQ codebooks round-trip through the versioned store; restored serve == in-memory serve") {
-    val wd = Files.createTempDirectory("graft-pq-persist").toString
+    val wd = tempDir("graft-pq-persist").toString
     val books = Ann.pqCodebooks(emb)
     val served = Ann.pqPersistServe(emb, wd)
     val restored = new VersionedSnapshot(spark, Paths.get(wd, "pqbook"))
@@ -62,7 +62,7 @@ class AnnPersistSpec extends SparkTestBase {
   }
 
   test("a second publish supersedes the first and the sweep bounds disk") {
-    val wd = Files.createTempDirectory("graft-ivf-repub").toString
+    val wd = tempDir("graft-ivf-repub").toString
     val store = new VersionedSnapshot(spark, Paths.get(wd, "ivfbook"))
     val bookA = Ann.ivfCentroids(emb, iters = 0) // the untrained seeds
     val bookB = Ann.ivfCentroids(emb)            // the trained book

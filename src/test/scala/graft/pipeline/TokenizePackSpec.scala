@@ -30,7 +30,7 @@ class TokenizePackSpec extends SparkTestBase {
 
   test("shard writer round-trips: one file per shard, read-back re-digests to the manifest") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val out = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val out = tempDir("graft-shards").toString
     val manifest = TextPipeline.tokenizePackWrite(docs, "doc_id", "text", out)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getString(4)))).toMap
     assert(manifest.nonEmpty)

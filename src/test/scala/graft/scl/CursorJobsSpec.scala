@@ -19,7 +19,7 @@ class CursorJobsSpec extends SparkTestBase {
   private val ParquetRows = 180
 
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("cursor-jobs").toString
+    val d = tempDir("cursor-jobs").toString
     // three files, so three scan partitions
     spark.range(0, ParquetRows, 1, 3)
       .select(col("id").as("n_nationkey"), concat(lit("n"), col("id")).as("n_name"))

@@ -1,7 +1,5 @@
 package graft.server
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement runner for the CAS-writer ladder (PLANS.md record):
   * `sbt "Test/runMain graft.server.CasLadderMeasure [sfDir]"` — prints
   * wall time and retry count per writer tier at the bench's parameters
@@ -11,13 +9,7 @@ import org.apache.spark.sql.SparkSession
 object CasLadderMeasure {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.build("local[32]", 32)
     for (w <- Seq(1, 4, 8)) {
       val runs = (1 to 3).map { _ =>
         val t0 = System.nanoTime()

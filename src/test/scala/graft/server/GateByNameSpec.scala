@@ -13,7 +13,7 @@ import graft.sexp.Sexp.Atom
 class GateByNameSpec extends SparkTestBase {
 
   // an external catalog whose `nation` table has no file behind it
-  private lazy val dir = java.nio.file.Files.createTempDirectory("gate-by-name").toString
+  private lazy val dir = tempDir("gate-by-name").toString
 
   private def withListener[A](bootstrap: Boolean)(f: Listener => A): A = {
     val l = new Listener(spark, Some(new ParquetCatalog(spark, dir)))

@@ -183,7 +183,7 @@ class ServerSpec extends SparkTestBase {
   }
 
   test("disk storage backend: state written by one server boot serves the next") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-server-disk").toString
+    val dir = tempDir("graft-server-disk").toString
     val cfg = s"(server (storage (disk $dir)) (transport (tcp (port 0))))"
     def roundTrip(reqs: Seq[String]): Seq[String] = {
       val listener = Server.boot(spark, cfg).fold(e => fail(e), identity)

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, StructField, LongType, StringType}
@@ -14,7 +13,7 @@ class TextIngestSpec extends SparkTestBase {
     StructField("doc_id", LongType), StructField("text", StringType)))
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft_ingest").toString
+    tempDir("graft_ingest").toString
 
   test("readJsonl parses clean lines and quarantines malformed ones without failing") {
     val dir = tmpDir()

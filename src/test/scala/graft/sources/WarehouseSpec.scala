@@ -43,7 +43,7 @@ class WarehouseSpec extends SparkTestBase {
   }
 
   test("partitioned parquet prunes non-matching partitions at planning time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part").toString
     val docs = Seq(
       (1L, "en", "aaa"), (2L, "en", "bbb"), (3L, "de", "ccc"), (4L, "fr", "ddd"))
       .toDF("doc_id", "lang", "text")

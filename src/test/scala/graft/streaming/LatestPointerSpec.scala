@@ -37,11 +37,8 @@ class LatestPointerSpec extends SparkTestBase {
       Binding("etag", etag, (root, body) => etag.put(root, body)))
   }
 
-  private def tmpRoot(tag: String): Path = {
-    val p = Files.createTempDirectory(s"graft-ptr-$tag")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmpRoot(tag: String): Path =
+    tempDir(s"graft-ptr-$tag")
 
   private def asSet(df: DataFrame): Set[Long] =
     df.select(col("hv")).collect().map(_.getLong(0)).toSet

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
@@ -23,7 +23,7 @@ class RetentionSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
 
   private def work(tag: String): String =
-    Files.createTempDirectory(s"graft-retention-$tag").toString
+    tempDir(s"graft-retention-$tag").toString
 
   test("a retired band re-admits: planted re-sends pass the horizoned gate and would not pass the grow-only one") {
     val wd = work("readmit")

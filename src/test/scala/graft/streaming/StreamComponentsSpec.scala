@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
@@ -15,7 +14,7 @@ class StreamComponentsSpec extends SparkTestBase {
   import spark.implicits._
 
   test("cross-batch component merge lands on the batch answer (hand-traced)") {
-    val work = Files.createTempDirectory("graft-streamcc-spec").toString
+    val work = tempDir("graft-streamcc-spec").toString
     val sfDir = s"$work/sf"
     Seq(
       (1L, 50L, 1L), (1L, 50L, 2L),   // batch 0: edge 1-2
@@ -32,7 +31,7 @@ class StreamComponentsSpec extends SparkTestBase {
 
   test("INSERT-ONLY contract: state never un-merges; retraction recovery is the batch recompute") {
     import java.nio.file.Paths
-    val work = Files.createTempDirectory("graft-streamcc-retract").toString
+    val work = tempDir("graft-streamcc-retract").toString
     val verts = new BucketedState(spark, Paths.get(work, "verts"), StreamOracle.StateBuckets)
     val forest = new BucketedState(spark, Paths.get(work, "forest"), StreamOracle.StateBuckets)
     // batch 0 links parts {1,2}; batch 1's order (2,3) merges in 3

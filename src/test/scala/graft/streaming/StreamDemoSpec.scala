@@ -9,7 +9,7 @@ import graft.SparkTestBase
 class StreamDemoSpec extends SparkTestBase {
 
   test("stream demo: sessionize + interval join + dedup reach batch parity through the store") {
-    val work = java.nio.file.Files.createTempDirectory("graft-streamdemo-spec").toString
+    val work = tempDir("graft-streamdemo-spec").toString
     graft.StreamDemo.run(spark, "/root/testdata/sf0.001", work) match {
       case Left(e) => fail(e)
       case Right(s) =>

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -27,10 +26,8 @@ class StreamRestartSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def work(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft-restart-$tag")
-    d.toString
-  }
+  private def work(tag: String): String =
+    tempDir(s"graft-restart-$tag").toString
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet

@@ -27,11 +27,8 @@ import org.apache.spark.sql.functions._
 class StreamStateSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmpRoot(): Path = {
-    val p = Files.createTempDirectory("graft-bucketstate")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmpRoot(): Path =
+    tempDir("graft-bucketstate")
 
   /** Keyed payload with the state's slot column attached, pinned to the
     * batch that will write it. */

@@ -102,7 +102,7 @@ class StreamsSpec extends SparkTestBase {
   test("per-batch dimension refresh: batch k joins snapshot k (hand-traced)") {
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[Event]
-    val work = java.nio.file.Files.createTempDirectory("graft-enrich-spec").toString
+    val work = tempDir("graft-enrich-spec").toString
     // dimension snapshots keyed by batch id — the versioned layout the
     // operator's retry-idempotence contract depends on
     def dim(v: Long) = Seq((1L, s"v$v"), (2L, s"v$v")).toDF("key", "tag")

@@ -25,11 +25,8 @@ import org.apache.spark.sql.functions._
 class VersionedSnapshotSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmpRoot(): Path = {
-    val p = Files.createTempDirectory("graft-versionedsnap")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmpRoot(): Path =
+    tempDir("graft-versionedsnap")
 
   private def versionDirs(root: Path): Set[String] =
     Option(root.toFile.listFiles()).getOrElse(Array.empty)
